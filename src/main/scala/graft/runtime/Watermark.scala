@@ -1,8 +1,7 @@
 package graft.runtime
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.merge.MergeSink
 
@@ -12,31 +11,34 @@ import graft.merge.MergeSink
   *
   * Kept as a real queryable table (observability parity: rows_last_run,
   * total_rows_ever) rather than an opaque checkpoint. It is tiny — one row
-  * per stream — so the driver-side read of a handful of rows is not a
-  * distributed-compute violation.
+  * per stream — so the driver holds all of it.
   */
 final case class WatermarkState(table: String, lastFetchedAt: Timestamp,
                                 rowsLastRun: Long, lastRunAt: Timestamp,
                                 totalRowsEver: Long)
 
-/** All operations serialize on the store instance: advance() is a
-  * read-modify-write over one shared table whose commit is a directory
-  * swap, so concurrent streams (IncrementalRunner maxConcurrentStreams>1)
-  * would otherwise lose updates or read mid-swap. The table is a handful
-  * of rows — serialization costs nothing. */
+/** A driver-side snapshot of the table, loaded once on first use through
+  * [[MergeSink.readTarget]] (so recovery runs). Reads come from memory and
+  * launch no Spark job. Each `advance` is one serialized write of the whole
+  * table via [[MergeSink.writeReplace]]; the snapshot is published after the
+  * write returns and dropped if it throws (the next call reloads from disk).
+  * Single writer per table: the contract [[MergeSink.recover]] states. */
 class WatermarkStore(spark: SparkSession, dir: String) {
   import WatermarkStore._
 
-  def all(): Map[String, WatermarkState] = this.synchronized {
-    MergeSink.readTarget(spark, dir).map { df =>
+  @volatile private var snapshot: Option[Map[String, WatermarkState]] = None
+
+  def all(): Map[String, WatermarkState] = snapshot.getOrElse(this.synchronized {
+    if (snapshot.isEmpty) snapshot = Some(MergeSink.readTarget(spark, dir).map { df =>
       df.collect().map { r =>
         val s = WatermarkState(r.getAs[String]("table_name"),
           tsOf(r.getAs[Any]("last_fetched_at")), r.getAs[Long]("rows_last_run"),
           tsOf(r.getAs[Any]("last_run_at")), r.getAs[Long]("total_rows_ever"))
         s.table -> s
       }.toMap
-    }.getOrElse(Map.empty)
-  }
+    }.getOrElse(Map.empty))
+    snapshot.get
+  })
 
   def get(table: String): Option[WatermarkState] = all().get(table)
 
@@ -51,15 +53,13 @@ class WatermarkStore(spark: SparkSession, dir: String) {
     * window never grows unboundedly. */
   def advance(table: String, rows: Long, to: Timestamp, now: Timestamp): Unit =
     this.synchronized {
-      val prev = get(table)
-      val next = WatermarkState(table, to, rows, now,
-        prev.map(_.totalRowsEver).getOrElse(0L) + rows)
-      val row = Row(next.table, next.lastFetchedAt, next.rowsLastRun,
-        next.lastRunAt, next.totalRowsEver)
-      val df = spark.createDataFrame(
-        java.util.Arrays.asList(row), schema)
-      MergeSink.upsertPartial(spark, dir, df, Seq("table_name"),
-        Seq("last_fetched_at", "rows_last_run", "last_run_at", "total_rows_ever"))
+      val cur = all()
+      val next = cur + (table -> WatermarkState(table, to, rows, now,
+        cur.get(table).map(_.totalRowsEver).getOrElse(0L) + rows))
+      try MergeSink.writeReplace(spark, dir, spark.createDataFrame(java.util.Arrays.asList(
+        next.values.toSeq.sortBy(_.table).map(Row.fromTuple): _*), schema).coalesce(1))
+      catch { case e: Throwable => snapshot = None; throw e }
+      snapshot = Some(next)
     }
 }
 

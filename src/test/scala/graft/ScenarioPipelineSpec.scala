@@ -76,9 +76,13 @@ class ScenarioPipelineSpec extends SparkTestBase {
       assert(a.count() == b.count(), s"$t rows")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$t content")
     }
-    // all six watermark rows survived the concurrent advances
-    assert(store.all().keySet.intersect(
-      ScenarioPipeline.streams(spark, src, parBoot).map(_.name).toSet).size == 6)
+    // all six watermark rows survived the concurrent advances, in memory
+    // and in the on-disk table a fresh store loads
+    val names = ScenarioPipeline.streams(spark, src, parBoot).map(_.name).toSet
+    val onDisk = new WatermarkStore(spark, parBoot.tablePath("etl_watermark")).all()
+    assert(onDisk == store.all())
+    assert(onDisk.keySet.intersect(names).size == 6)
+    assert(spark.read.parquet(parBoot.tablePath("etl_watermark")).count() == onDisk.size)
   }
 
   test("SCD2 invariant: at most one current version per (scenario, node)") {
