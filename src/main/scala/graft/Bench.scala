@@ -20,10 +20,10 @@ object Bench {
     * universe. documents.text and embeddings.embedding are deterministically
     * PERTURBED per replica — identical copies would multiply duplicate
     * CLUSTER SIZE, making near-dup pair counts grow quadratically and
-    * measuring a fully-duplicated-corpus stress instead of a scale slope
-    * (the ScaleProbe rationale). Every 7th word salted ⇒ cross-replica
-    * shingle Jaccard ≈ 0.2, far below the 0.6 near-dup threshold, while
-    * WITHIN-replica planted dups are preserved (same salt). */
+    * measuring a fully-duplicated-corpus stress instead of a scale slope.
+    * Every 7th word salted ⇒ cross-replica shingle Jaccard ≈ 0.2, far
+    * below the 0.6 near-dup threshold, while WITHIN-replica planted dups
+    * are preserved (same salt). */
   private def buildScaled(spark: SparkSession, sfDir: String, k: Int): String = {
     val out = java.nio.file.Files.createTempDirectory(s"bench-${k}x-").toString
     val all = graft.model.Tables.relational ++ graft.model.Tables.stream ++

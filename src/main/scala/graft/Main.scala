@@ -27,10 +27,10 @@ import graft.sources.Jdbc
   *                            exists in this environment; the binding is the
   *                            same pushdown reader ApiSurfaceSpec covers.
   *  - `GRAFT_CYCLES`          cycle count (default: run forever)
-  *  - `GRAFT_TX_SINKS`        "1"/"true": commit every target through the
-  *                            TxTable log (atomic single-rename commits)
-  *                            instead of the rename-swap protocol
   *  - `GRAFT_MASTER`          master when not launched via spark-submit
+  *
+  * Every target commits through MergeSink's rename-swap protocol (see
+  * `ScenarioPipeline.streams`).
   *
   * With neither source set, the deterministic demo corpus is used — that
   * path is the smoke test (MainSmokeSpec).
@@ -62,33 +62,15 @@ object Main {
     // cycles (~hourly) once it fragments past 256 files
     val compactEvery = env.getOrElse("GRAFT_COMPACT_EVERY_CYCLES", "120").trim.toInt
     val compactMaxFiles = env.getOrElse("GRAFT_COMPACT_MAX_FILES", "256").trim.toInt
-    // GRAFT_TX_SINKS=1 flips every target to the TxTable commit-log protocol
-    val txSinks = Set("1", "true").contains(
-      env.getOrElse("GRAFT_TX_SINKS", "").trim.toLowerCase)
     val sched = new CycleScheduler(runner, conf.maxConsecutiveFailures,
       metrics = Some(new MetricsStore(spark, boot.tablePath("etl_metrics"))),
-      maintenance =
-        if (txSinks)
-          // tx maintenance: the self-driving policy loop — per cycle it
-          // reads each table's health from the log (small-file count, DV
-          // fractions, log length past the last checkpoint, reclaimable
-          // debris) and runs ONLY the actions whose thresholds trip, in
-          // dependency order (rewrites → checkpoint → vacuum). A healthy
-          // table costs a few metadata probes and zero commits, so the
-          // hook runs every `compactEvery` cycles without churn.
-          graft.ops.Maintenance.cycleHook(spark,
-            graft.model.Schemas.targets.keys.toSeq.map(boot.tablePath),
-            every = compactEvery,
-            p = graft.ops.MaintainPolicy(
-              minSmallFiles = compactMaxFiles,
-              retainVersions = 2))
-        else cycleId =>
-          if (compactEvery > 0 && cycleId % compactEvery == 0)
-            graft.merge.MergeSink.compactIfNeeded(spark,
-              boot.tablePath("fact_scenario_timeline"), maxFiles = compactMaxFiles,
-              targetPartitions = 1, partitionCols = Seq("event_date")))
+      maintenance = cycleId =>
+        if (compactEvery > 0 && cycleId % compactEvery == 0)
+          graft.merge.MergeSink.compactIfNeeded(spark,
+            boot.tablePath("fact_scenario_timeline"), maxFiles = compactMaxFiles,
+            targetPartitions = 1, partitionCols = Seq("event_date")))
     val cycles = env.get("GRAFT_CYCLES").map(_.trim.toInt).getOrElse(Int.MaxValue)
-    sched.run(ScenarioPipeline.streams(spark, src, boot, txSinks),
+    sched.run(ScenarioPipeline.streams(spark, src, boot),
       conf.pollIntervalSec, cycles)
   }
 

@@ -341,8 +341,8 @@ object SparkEntry {
     // purpose: the md5 family is the VERIFICATION twin (32 md5s per
     // shingle, ~13x the xxhash64 production family's constant factor), so
     // an uncapped bench run would measure hash throughput, not the engine;
-    // the production family's batch-vs-corpus scaling is what ScaleProbe's
-    // inc_minhash probe measures (1.0x at an 8x corpus).
+    // the production family's batch-vs-corpus scaling was measured by a
+    // dev probe at 1.0x against an 8x corpus.
     "q62_minhash_incremental" -> ((s, dir) => {
       val docs = T(s, dir, "documents").filter(col("doc_id") < 500)
       val idx = Dedup.portableIncrementalAssignments(
@@ -1334,9 +1334,9 @@ object SparkEntry {
     // replication-inflated boilerplate grams at scale: under clean 8×
     // replication (every df ×8) it would cut the C(df,2) fanout from
     // 88.3M to 14.4M pairs, and on the bench's text-perturbed 8× corpus
-    // the measured wall-clock drops ~2.2× (graft.tools.Q112Probe). The
-    // old 1000 never triggered anywhere (dfs top out near 200 even at
-    // 8×) and was a fence in name only.
+    // the measured wall-clock drops ~2.2×. The old 1000 never triggered
+    // anywhere (dfs top out near 200 even at 8×) and was a fence in name
+    // only.
     "q112_sparse_cosine" -> ((s, dir) =>
       graft.ext.InvertedIndex.sparseCosinePairs(T(s, dir, "documents"),
         "doc_id", "text", n = 3, maxDf = 64L, minSim = 0.5)),

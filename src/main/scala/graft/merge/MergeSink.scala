@@ -29,10 +29,18 @@ object MergeSink {
   /** Read current sink contents, or None before first write. A directory
     * holding only a _SUCCESS marker (a bootstrapped PARTITIONED table has no
     * data files until the first append) also counts as absent. Runs crash
-    * [[recover]]y first, so a reader never observes a half-committed swap. */
+    * [[recover]]y first, so a reader never observes a half-committed swap.
+    *
+    * Throws on a directory that holds a [[TxTable]] log: every rename-mode
+    * sink reads through here, and treating such a table as absent (or as
+    * its raw files) would swap the whole table out for one batch, or add
+    * files the log never references. Use [[readAny]] to read either. */
   def readTarget(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (TxTable.exists(spark, dir))
+      throw new IllegalStateException(s"$dir holds a TxTable commit log: " +
+        "read it with readAny; rename-swap sinks cannot write it")
     recover(spark, dir)
     if (fs.exists(p) && fs.listStatus(p).nonEmpty)
       try Some(spark.read.parquet(dir))
@@ -599,12 +607,14 @@ object MergeSink {
   }
 
   // ---------------------------------------------------------------------
-  // Transactional mode (M1-M4 over the TxTable commit log)
+  // M1-M4 over the TxTable commit log
   //
   // Same merge plans, different commit protocol: instead of the rename
   // swap (multi-step, needs recover()), each batch publishes via ONE log
-  // rename — no crash window a reader can observe, no recovery pass. This
-  // is the binding writeReplace's scaladoc promises for cluster deploys.
+  // rename — no crash window a reader can observe, no recovery pass. No
+  // pipeline or streaming sink binds these (TxTableSpec drives them); the
+  // sinks move to the log once deletion vectors and upkeep bound its
+  // storage (ROADMAP.md).
   // ---------------------------------------------------------------------
 
   /** M1 over the commit log: full merge + atomic `replace` commit. The head

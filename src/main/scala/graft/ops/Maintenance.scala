@@ -55,8 +55,7 @@ object Maintenance {
 
   /** Run the policy once. Returns (action, detail) per action taken —
     * `("noop", …)` when the table is healthy. SQL face:
-    * `CALL graft.system.maintain('db.t')`; production face:
-    * [[cycleHook]]. */
+    * `CALL graft.system.maintain('db.t')`. */
   def maintain(spark: SparkSession, dir: String,
                p: MaintainPolicy = MaintainPolicy()): Seq[(String, String)] = {
     require(TxTable.exists(spark, dir), s"no TxTable at $dir")
@@ -144,16 +143,4 @@ object Maintenance {
     val r = out.result()
     if (r.isEmpty) Seq("noop" -> "no threshold tripped") else r
   }
-
-  /** [[graft.runtime.CycleScheduler]] maintenance-hook factory: every
-    * `every` cycles, run the policy over each existing table dir.
-    * Failures are contained by the scheduler's own hook guard — upkeep
-    * never kills the ingest loop. */
-  def cycleHook(spark: SparkSession, dirs: => Seq[String],
-                every: Int = 120,
-                p: MaintainPolicy = MaintainPolicy()): Long => Unit =
-    cycleId =>
-      if (every > 0 && cycleId % every == 0)
-        dirs.filter(TxTable.exists(spark, _))
-          .foreach(maintain(spark, _, p))
 }

@@ -368,13 +368,13 @@ object ScenarioPipeline {
     * warehouse, with the reference's merge mode, mutable-column subset, and
     * cap per stream (pipeline.py:41-110, load.py).
     *
-    * `txSinks` flips every target to the TxTable commit-log protocol
-    * (same merge plans, atomic single-rename commits, log-level partition
-    * pruning) — the production setting for deployments where readers and
-    * the writer overlap; downstream reads go through
-    * [[MergeSink.readAny]] either way. */
+    * Every target commits through the rename-swap protocol; the M1-M4
+    * sinks move to the TxTable log together, once deletion vectors and
+    * automatic upkeep bound its storage (ROADMAP.md). A target directory
+    * that already holds a TxTable log is refused, not overwritten
+    * ([[MergeSink.readTarget]]). */
   def streams(spark: SparkSession, src: ScenarioSources,
-              boot: Bootstrap, txSinks: Boolean = false): Seq[StreamSpec] = {
+              boot: Bootstrap): Seq[StreamSpec] = {
     // within-batch: keep the newest row per key by wm_ts, then drop the
     // runner-only wm_ts column so it never reaches the target schema
     def latest(b: DataFrame, keys: Seq[String]): DataFrame =
@@ -386,16 +386,11 @@ object ScenarioPipeline {
     def buckets(key: String) = MergeSink.PartitionScheme.keyHash(Seq(key), 16)
     def upsert(table: String, b: DataFrame, key: String,
                mutable: Seq[String]): Unit =
-      if (txSinks) MergeSink.upsertPartialScopedTx(spark, boot.tablePath(table),
-        latest(b, Seq(key)), Seq(key), mutable, buckets(key))
-      else MergeSink.upsertPartialScoped(spark, boot.tablePath(table),
+      MergeSink.upsertPartialScoped(spark, boot.tablePath(table),
         latest(b, Seq(key)), Seq(key), mutable, buckets(key))
     def scd2(table: String, b: DataFrame, key: String,
              mutable: Seq[String]): Unit =
-      // M2 ≡ M1 on (key) — both modes keep the partition-scoped plan
-      if (txSinks) MergeSink.upsertPartialScopedTx(spark, boot.tablePath(table),
-        latest(b, Seq(key)), Seq(key), mutable, buckets(key))
-      else MergeSink.scd2Scoped(spark, boot.tablePath(table),
+      MergeSink.scd2Scoped(spark, boot.tablePath(table),
         latest(b, Seq(key)), key, mutable, buckets(key))
     Seq(
       StreamSpec("fc_scenario",
@@ -413,11 +408,8 @@ object ScenarioPipeline {
         cap = 1000),
       StreamSpec("fc_scenario_node_calc",
         (sp, since) => extractNodeCalc(src, since), "wm_ts", "source_id",
-        b =>
-          if (txSinks) MergeSink.insertIfAbsentTx(spark,
-            boot.tablePath("fact_node_calc_results"), b.drop("wm_ts"), Seq("source_id"))
-          else MergeSink.insertIfAbsent(spark,
-            boot.tablePath("fact_node_calc_results"), b.drop("wm_ts"), Seq("source_id")),
+        b => MergeSink.insertIfAbsent(spark,
+          boot.tablePath("fact_node_calc_results"), b.drop("wm_ts"), Seq("source_id")),
         cap = 5000),
       StreamSpec("fc_scenario_event_data",
         (sp, since) => extractEventData(src, since), "wm_ts", "source_id",
@@ -428,13 +420,8 @@ object ScenarioPipeline {
         (sp, since) => extractTimeline(src, since), "wm_ts", "source_key",
         // date-partitioned event log: BI's "recent events" access path
         // becomes partition pruning; appends touch only the batch's dates
-        b =>
-          if (txSinks) MergeSink.appendDedupTx(spark,
-            boot.tablePath("fact_scenario_timeline"),
-            b.drop("wm_ts"), "source_key", partitionCols = Seq("event_date"))
-          else MergeSink.appendDedup(spark,
-            boot.tablePath("fact_scenario_timeline"),
-            b.drop("wm_ts"), "source_key", partitionCols = Seq("event_date")),
+        b => MergeSink.appendDedup(spark, boot.tablePath("fact_scenario_timeline"),
+          b.drop("wm_ts"), "source_key", partitionCols = Seq("event_date")),
         cap = 10000))
   }
 }

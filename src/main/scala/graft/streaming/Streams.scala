@@ -43,60 +43,45 @@ object Streams {
       }
       .start()
 
-  /** Ready-made [[toMergeSink]] callbacks with the commit protocol chosen
-    * per deployment — the streaming analog of `ScenarioPipeline.streams`'
-    * `txSinks` parameter, resolving the same `GRAFT_TX_SINKS` switch Main
-    * reads. `tx = true` applies each micro-batch through the TxTable
-    * commit-log modes (one atomic log-slot claim per batch, no recovery
-    * pass); `false` through the rename-swap modes. Both families are
-    * idempotent per batch, so the engine's at-least-once redelivery stays
-    * effectively-once either way; read targets back with
+  /** Ready-made [[toMergeSink]] callbacks. The M1-M4 sinks and the folds
+    * commit through the rename-swap modes, the one protocol
+    * `ScenarioPipeline.streams` binds too; each is idempotent per batch,
+    * so the engine's at-least-once redelivery stays effectively-once.
+    * [[txAppendOnce]] and [[mergeCdcDV]] are TxTable-only: they ride the
+    * batchId into the commit log. The merge sinks move to the TxTable log
+    * together, once deletion vectors and automatic upkeep bound its
+    * storage (ROADMAP.md); until then a rename-mode sink refuses a TxTable
+    * directory ([[MergeSink.readTarget]]). Read targets back with
     * [[MergeSink.readAny]], which handles both layouts. */
   object Sinks {
-    /** Main's deploy switch, shared verbatim: GRAFT_TX_SINKS ∈ {1, true}. */
-    def txEnabled(env: Map[String, String] = sys.env): Boolean =
-      Set("1", "true").contains(
-        env.getOrElse("GRAFT_TX_SINKS", "").trim.toLowerCase)
-
     def appendDedup(dir: String, key: String,
-                    partitionCols: Seq[String] = Nil,
-                    tx: Boolean = txEnabled())
+                    partitionCols: Seq[String] = Nil)
         : (SparkSession, DataFrame, Long) => Unit =
-      if (tx) (s, b, _) => MergeSink.appendDedupTx(s, dir, b, key, partitionCols)
-      else (s, b, _) => MergeSink.appendDedup(s, dir, b, key, partitionCols)
+      (s, b, _) => MergeSink.appendDedup(s, dir, b, key, partitionCols)
 
     def insertIfAbsent(dir: String, keys: Seq[String],
-                       partitionCols: Seq[String] = Nil,
-                       tx: Boolean = txEnabled())
+                       partitionCols: Seq[String] = Nil)
         : (SparkSession, DataFrame, Long) => Unit =
-      if (tx) (s, b, _) => MergeSink.insertIfAbsentTx(s, dir, b, keys, partitionCols)
-      else (s, b, _) => MergeSink.insertIfAbsent(s, dir, b, keys, partitionCols)
+      (s, b, _) => MergeSink.insertIfAbsent(s, dir, b, keys, partitionCols)
 
     def upsertPartial(dir: String, keys: Seq[String], mutableCols: Seq[String],
-                      orderCols: Seq[String] = Nil,
-                      tx: Boolean = txEnabled())
+                      orderCols: Seq[String] = Nil)
         : (SparkSession, DataFrame, Long) => Unit =
-      if (tx) (s, b, _) => MergeSink.upsertPartialTx(s, dir, b, keys, mutableCols, orderCols)
-      else (s, b, _) => MergeSink.upsertPartial(s, dir, b, keys, mutableCols, orderCols)
+      (s, b, _) => MergeSink.upsertPartial(s, dir, b, keys, mutableCols, orderCols)
 
     def scd2(dir: String, key: String, mutableCols: Seq[String],
-             orderCols: Seq[String] = Nil,
-             tx: Boolean = txEnabled())
+             orderCols: Seq[String] = Nil)
         : (SparkSession, DataFrame, Long) => Unit =
-      if (tx) (s, b, _) => MergeSink.scd2Tx(s, dir, b, key, mutableCols, orderCols)
-      else (s, b, _) => MergeSink.scd2(s, dir, b, key, mutableCols, orderCols)
+      (s, b, _) => MergeSink.scd2(s, dir, b, key, mutableCols, orderCols)
 
     /** The partition-scoped upsert — the sink the production pipelines
       * bind (each micro-batch merges against ONLY the hash buckets its
       * keys live in; O(batch + touched partitions), never O(target)). */
     def upsertScoped(dir: String, keys: Seq[String], mutableCols: Seq[String],
                      scheme: MergeSink.PartitionScheme,
-                     orderCols: Seq[String] = Nil,
-                     tx: Boolean = txEnabled())
+                     orderCols: Seq[String] = Nil)
         : (SparkSession, DataFrame, Long) => Unit =
-      if (tx) (s, b, _) =>
-        MergeSink.upsertPartialScopedTx(s, dir, b, keys, mutableCols, scheme, orderCols)
-      else (s, b, _) =>
+      (s, b, _) =>
         MergeSink.upsertPartialScoped(s, dir, b, keys, mutableCols, scheme, orderCols)
 
     /** Exactly-once RAW append into a [[graft.merge.TxTable]] — the sink
@@ -166,8 +151,7 @@ object Streams {
     def clusterFold(sigDir: String, bandDir: String, labelsDir: String,
                     idCol: String = "doc_id", textCol: String = "text",
                     n: Int = 1, k: Int = 32, bands: Int = 4,
-                    threshold: Double = 0.6, labelBuckets: Int = 32,
-                    tx: Boolean = txEnabled())
+                    threshold: Double = 0.6, labelBuckets: Int = 32)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       import graft.ext.Dedup
       def loadOr(dir: String, like: DataFrame): DataFrame =
@@ -182,20 +166,13 @@ object Streams {
       // materialize the delta BEFORE the upsert mutates the labels it reads
       val delta = Dedup.incrementalClustersDelta(edges, labels).localCheckpoint()
       val scheme = MergeSink.PartitionScheme.keyHash(Seq("doc_id"), labelBuckets)
-      if (tx) MergeSink.upsertPartialScopedTx(
-        s, labelsDir, delta, Seq("doc_id"), Seq("cluster_id"), scheme)
-      else MergeSink.upsertPartialScoped(
+      MergeSink.upsertPartialScoped(
         s, labelsDir, delta, Seq("doc_id"), Seq("cluster_id"), scheme)
       val sigs = Dedup.signatures(batch, idCol, textCol, n, k).localCheckpoint()
       val bandRows = Dedup.lshBands(sigs, k, bands).withColumn("bk",
         concat_ws("#", col("doc_id"), col("band_id")))
-      if (tx) {
-        MergeSink.appendDedupTx(s, sigDir, sigs, "doc_id")
-        MergeSink.appendDedupTx(s, bandDir, bandRows, "bk")
-      } else {
-        MergeSink.appendDedup(s, sigDir, sigs, "doc_id")
-        MergeSink.appendDedup(s, bandDir, bandRows, "bk")
-      }
+      MergeSink.appendDedup(s, sigDir, sigs, "doc_id")
+      MergeSink.appendDedup(s, bandDir, bandRows, "bk")
     }
 
     /** Incremental segment dedup ([[graft.ext.Dedup
@@ -217,8 +194,7 @@ object Streams {
       * rewrite when history grows. */
     def segmentFold(countsDir: String, cleanDir: String,
                     idCol: String = "doc_id", textCol: String = "text",
-                    window: Int = 8, minDocs: Long = 2,
-                    tx: Boolean = txEnabled())
+                    window: Int = 8, minDocs: Long = 2)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, batchId) => {
       import graft.ext.Dedup
       val prior = MergeSink.readAny(s, countsDir)
@@ -233,13 +209,8 @@ object Streams {
         .withColumn("batch_id", lit(batchId))
         .withColumn("ck", concat_ws("#", col("seg_hash"), col("batch_id")))
         .localCheckpoint()
-      if (tx) {
-        MergeSink.appendDedupTx(s, cleanDir, cleanMat, "doc_id")
-        MergeSink.appendDedupTx(s, countsDir, contrib, "ck")
-      } else {
-        MergeSink.appendDedup(s, cleanDir, cleanMat, "doc_id")
-        MergeSink.appendDedup(s, countsDir, contrib, "ck")
-      }
+      MergeSink.appendDedup(s, cleanDir, cleanMat, "doc_id")
+      MergeSink.appendDedup(s, countsDir, contrib, "ck")
     }
 
     /** Incremental cardinality tracking as a streaming sink: each
@@ -252,8 +223,7 @@ object Streams {
       * needs). State bytes: O(keys × 2^lgK), independent of stream
       * length; the whole table is rewritten per batch, fine for the
       * key-cardinality regimes a per-key distinct tracker targets. */
-    def distinctFold(stateDir: String, key: String, value: String,
-                     lgK: Int = 12, tx: Boolean = txEnabled())
+    def distinctFold(stateDir: String, key: String, value: String, lgK: Int = 12)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       import graft.functions.SketchAggs
       val delta = SketchAggs.distinctState(batch, col(key), col(value), lgK)
@@ -262,8 +232,7 @@ object Streams {
           prev.select(col("key"), col("sketch")), delta)
         case None => delta
       }).localCheckpoint() // materialize BEFORE replacing the state it read
-      if (tx) graft.merge.TxTable.replace(s, stateDir, folded)
-      else MergeSink.writeReplace(s, stateDir, folded)
+      MergeSink.writeReplace(s, stateDir, folded)
     }
 
     /** Streaming drift monitor: score every micro-batch's value
@@ -275,8 +244,7 @@ object Streams {
       * outside the reference edges clamp into the boundary cells, so
       * out-of-range mass still registers as drift. O(bins) state read +
       * one narrow batch pass; rows append-dedup by batch_id. */
-    def driftMonitor(refDir: String, outDir: String, valueCol: String,
-                     tx: Boolean = txEnabled())
+    def driftMonitor(refDir: String, outDir: String, valueCol: String)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, batchId) => {
       val ref = MergeSink.readAny(s, refDir).getOrElse(
         throw new IllegalStateException(s"driftMonitor: no reference at $refDir"))
@@ -301,8 +269,7 @@ object Streams {
       val sp = s
       import sp.implicits._
       val row = Seq((batchId, n, tv)).toDF("batch_id", "n_rows", "tv")
-      if (tx) MergeSink.appendDedupTx(s, outDir, row, "batch_id")
-      else MergeSink.appendDedup(s, outDir, row, "batch_id")
+      MergeSink.appendDedup(s, outDir, row, "batch_id")
     }
 
     /** Streaming quantile fold: per-batch KLL sketches land as
@@ -313,16 +280,14 @@ object Streams {
       * current estimate with [[graft.functions.SketchAggs
       * .foldQuantileState]] over the state table. O(keys) rows appended
       * per batch; compact with the M-family rewrite when history grows. */
-    def quantileFold(stateDir: String, key: String, value: String,
-                     k: Int = 200, tx: Boolean = txEnabled())
+    def quantileFold(stateDir: String, key: String, value: String, k: Int = 200)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, batchId) => {
       import graft.functions.SketchAggs
       val contrib = SketchAggs.quantileState(batch, col(key), col(value), k)
         .withColumn("batch_id", lit(batchId))
         .withColumn("ck", concat_ws("#", col("key"), col("batch_id")))
         .localCheckpoint()
-      if (tx) MergeSink.appendDedupTx(s, stateDir, contrib, "ck")
-      else MergeSink.appendDedup(s, stateDir, contrib, "ck")
+      MergeSink.appendDedup(s, stateDir, contrib, "ck")
     }
 
     /** Streaming Count-Min fold: each micro-batch's counter matrix lands
@@ -333,15 +298,13 @@ object Streams {
       * [[graft.functions.SketchAggs.foldCmState]] over the state table
       * and point-query it with `cmEstimates`. One depth·width row
       * appended per batch, however large the batch. */
-    def cmFold(stateDir: String, item: String, depth: Int, width: Int,
-               tx: Boolean = txEnabled())
+    def cmFold(stateDir: String, item: String, depth: Int, width: Int)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, batchId) => {
       import graft.functions.SketchAggs
       val contrib = SketchAggs.cmState(batch, col(item), depth, width)
         .withColumn("batch_id", lit(batchId))
         .localCheckpoint()
-      if (tx) MergeSink.appendDedupTx(s, stateDir, contrib, "batch_id")
-      else MergeSink.appendDedup(s, stateDir, contrib, "batch_id")
+      MergeSink.appendDedup(s, stateDir, contrib, "batch_id")
     }
 
     /** Streaming manifest fold: each micro-batch appends its ADDITIVE
@@ -352,16 +315,14 @@ object Streams {
       * rescanning earlier batches. Read the current manifest with
       * [[graft.ops.Stats.manifestFromContributions]]. O(groups) rows per
       * batch. */
-    def manifestFold(stateDir: String, group: String, id: String,
-                     content: String, tx: Boolean = txEnabled())
+    def manifestFold(stateDir: String, group: String, id: String, content: String)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, batchId) => {
       val contrib = graft.ops.Stats.manifestContribution(batch,
           col(group), col(id), col(content))
         .withColumn("batch_id", lit(batchId))
         .withColumn("ck", concat_ws("#", col("group_key"), col("batch_id")))
         .localCheckpoint()
-      if (tx) MergeSink.appendDedupTx(s, stateDir, contrib, "ck")
-      else MergeSink.appendDedup(s, stateDir, contrib, "ck")
+      MergeSink.appendDedup(s, stateDir, contrib, "ck")
     }
 
     /** Streaming funnel fold — the micro-batch form of [[graft.ops.Funnel
@@ -381,7 +342,7 @@ object Streams {
       * the inherent bounded-state streaming-funnel limitation, stated
       * rather than hidden (exact repair = rerun the batch operator). */
     def funnelFold(stateDir: String, user: String, ts: String,
-        steps: Seq[(String, Column)], tx: Boolean = txEnabled())
+        steps: Seq[(String, Column)])
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       require(steps.nonEmpty, "steps must not be empty")
       val stepCols = steps.map { case (n, _) => s"t_$n" }
@@ -414,8 +375,7 @@ object Streams {
           .drop("__new")
       }
       val out = st.localCheckpoint() // materialize BEFORE replacing what it read
-      if (tx) graft.merge.TxTable.replace(s, stateDir, out)
-      else MergeSink.writeReplace(s, stateDir, out)
+      MergeSink.writeReplace(s, stateDir, out)
     }
 
     /** Streaming top-k-rows fold: the per-group leaderboard as persisted
@@ -430,7 +390,7 @@ object Streams {
       * aggregate). State bytes O(groups·k) forever, however long the
       * stream. */
     def topkRowsFold(stateDir: String, group: String, value: String,
-        tie: String, k: Int, tx: Boolean = txEnabled())
+        tie: String, k: Int)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       import graft.functions.SketchAggs
       val bTop = SketchAggs.topkRows(batch, Seq(col(group).as("group_key")),
@@ -444,8 +404,7 @@ object Streams {
           .select(col("group_key"), col("tie"), col("val"))
         case None => bTop
       }).localCheckpoint() // materialize BEFORE replacing what it read
-      if (tx) graft.merge.TxTable.replace(s, stateDir, folded)
-      else MergeSink.writeReplace(s, stateDir, folded)
+      MergeSink.writeReplace(s, stateDir, folded)
     }
 
     /** Streaming cohort fold — the micro-batch form of [[graft.ops.Funnel
@@ -457,8 +416,7 @@ object Streams {
       * is safe by algebra on both tables. Read the matrix with
       * [[graft.ops.Funnel.cohortRetentionFromState]]. State bytes:
       * O(users) + O(user-weeks). */
-    def cohortFold(firstDir: String, activityDir: String, user: String,
-        ts: String, tx: Boolean = txEnabled())
+    def cohortFold(firstDir: String, activityDir: String, user: String, ts: String)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       val bFirst = batch.groupBy(col(user).as("user_id"))
         .agg(min(col(ts)).as("first_ts"))
@@ -467,13 +425,11 @@ object Streams {
           .groupBy(col("user_id")).agg(min(col("first_ts")).as("first_ts"))
         case None => bFirst
       }).localCheckpoint() // materialize BEFORE replacing what it read
-      if (tx) graft.merge.TxTable.replace(s, firstDir, merged)
-      else MergeSink.writeReplace(s, firstDir, merged)
+      MergeSink.writeReplace(s, firstDir, merged)
       val act = batch.select(col(user).as("user_id"),
           to_date(date_trunc("week", col(ts))).as("week")).distinct()
         .withColumn("ak", concat_ws("#", col("user_id"), col("week")))
-      if (tx) MergeSink.appendDedupTx(s, activityDir, act, "ak")
-      else MergeSink.appendDedup(s, activityDir, act, "ak")
+      MergeSink.appendDedup(s, activityDir, act, "ak")
     }
 
     /** Streaming k-means fold — the micro-batch form of
@@ -488,8 +444,7 @@ object Streams {
       * k-row contribution aggregate, an O(batch) assignment append, and
       * an O(k·batches) state rewrite. */
     def kmeansFold(stateDir: String, assignDir: String, idCol: String,
-                   vecCol: String, k: Int, lloydIters: Int = 1,
-                   tx: Boolean = txEnabled())
+                   vecCol: String, k: Int, lloydIters: Int = 1)
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, epoch) => {
       import graft.ext.SimSearch
       val bid = s"b$epoch"
@@ -510,12 +465,8 @@ object Streams {
       }
       val assignRows = out.select(col("id"), col("cluster_id"), col("sim"))
         .localCheckpoint()
-      if (tx) MergeSink.appendDedupTx(s, assignDir, assignRows, "id")
-      else MergeSink.appendDedup(s, assignDir, assignRows, "id")
-      newContrib.foreach { c2 =>
-        if (tx) graft.merge.TxTable.replace(s, stateDir, c2)
-        else MergeSink.writeReplace(s, stateDir, c2)
-      }
+      MergeSink.appendDedup(s, assignDir, assignRows, "id")
+      newContrib.foreach(MergeSink.writeReplace(s, stateDir, _))
     }
   }
 

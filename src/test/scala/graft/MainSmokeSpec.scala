@@ -20,29 +20,6 @@ class MainSmokeSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$wh/etl_metrics").count() > 0)
   }
 
-  test("Main with GRAFT_TX_SINKS commits every target through the TxTable log") {
-    spark
-    val wh = tmpDir("main-tx")
-    Main.run(Map(
-      "GRAFT_WAREHOUSE" -> wh,
-      "GRAFT_CYCLES" -> "2",
-      "POLL_INTERVAL_SEC" -> "0",
-      "GRAFT_TX_SINKS" -> "1",
-      "GRAFT_COMPACT_EVERY_CYCLES" -> "1")) // exercises compactLog + vacuum
-    // all six targets are commit-log tables now
-    for (t <- Seq("dim_scenario", "fact_node_input_history", "fact_run_summary",
-        "fact_node_calc_results", "fact_event_input_history",
-        "fact_scenario_timeline"))
-      assert(graft.merge.TxTable.exists(spark, s"$wh/$t"), s"$t has no log")
-    // same contents the rename-swap smoke asserts, read through the log
-    val dim = graft.merge.TxTable.read(spark, s"$wh/dim_scenario").get
-    assert(dim.count() == 20)
-    assert(dim.select("scenario_id").distinct().count() == 20)
-    val timeline = graft.merge.TxTable.read(spark, s"$wh/fact_scenario_timeline").get
-    val keys = timeline.select("source_key")
-    assert(keys.count() > 0 && keys.count() == keys.distinct().count())
-  }
-
   test("maintenance compaction keeps the append-sink file count bounded across cycles") {
     spark
     val wh = tmpDir("main-compact")

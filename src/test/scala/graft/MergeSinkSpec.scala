@@ -320,4 +320,23 @@ class MergeSinkSpec extends SparkTestBase {
     assert(fromTx == snapshot(fsDir))
     assert(fromTx == Seq(("b", "open", "n-b"), ("c", "open", "n-c")))
   }
+
+  test("rename-mode sinks refuse a directory that holds a TxTable log") {
+    import graft.merge.TxTable
+    val dir = tmpDir("tx-guard")
+    val rows = Seq(("a", "open", "n-a"), ("b", "open", "n-b"))
+      .toDF("k", "status", "note")
+    MergeSink.upsertPartialTx(spark, dir, rows, Seq("k"), Seq("status"))
+    val batch = Seq(("b", "closed", "n-b"), ("c", "open", "n-c"))
+      .toDF("k", "status", "note")
+    intercept[IllegalStateException](MergeSink.upsertPartialScoped(spark, dir,
+      batch, Seq("k"), Seq("status"), MergeSink.PartitionScheme.keyHash(Seq("k"), 4)))
+    intercept[IllegalStateException](
+      MergeSink.insertIfAbsent(spark, dir, batch, Seq("k")))
+    intercept[IllegalStateException](
+      MergeSink.compactIfNeeded(spark, dir, maxFiles = 0, targetPartitions = 1))
+    assert(TxTable.read(spark, dir).get.select("k", "status", "note")
+      .as[(String, String, String)].collect().toSeq.sortBy(_._1) ==
+      Seq(("a", "open", "n-a"), ("b", "open", "n-b")))
+  }
 }

@@ -328,7 +328,7 @@ class StreamsSpec extends SparkTestBase {
       .as[Long].collect().toSet == Set(1L, 2L, 4L))
   }
 
-  test("streaming HLL distinct fold converges and is redelivery-stable in both protocols") {
+  test("streaming HLL distinct fold converges and is redelivery-stable") {
     import spark.implicits._
     import graft.functions.SketchAggs
     // 3 batches, overlapping values per key — the running estimate must
@@ -337,41 +337,38 @@ class StreamsSpec extends SparkTestBase {
       (1 to 40).map(v => ("a", v.toLong)) ++ (1 to 3).map(v => ("b", v.toLong)),
       (30 to 70).map(v => ("a", v.toLong)) ++ (2 to 5).map(v => ("b", v.toLong)),
       (60 to 100).map(v => ("a", v.toLong)))
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"hll-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"hll-b$i-$mode")
-        rows.toDF("k", "v").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val stateDir = tmpDir(s"hll-state-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.distinctFold(stateDir, "k", "v", tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"hll-ck-$mode")
-      def estimates(): Map[String, Long] =
-        SketchAggs.distinctEstimate(MergeSink.readAny(spark, stateDir).get)
-          .as[(String, Long)].collect().toMap
-      val e = estimates()
-      // small cardinalities sit in the sketch's exact regime
-      assert(e == Map("a" -> 100L, "b" -> 5L), s"mode=$mode got $e")
-
-      // redelivery: a fresh checkpoint re-sends every batch; register-
-      // idempotent union means estimates cannot inflate
-      run(s"hll-ck2-$mode")
-      assert(estimates() == e, s"redelivery drifted, mode=$mode")
+    val flat = tmpDir("hll-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"hll-b$i")
+      rows.toDF("k", "v").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val stateDir = tmpDir("hll-state")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.distinctFold(stateDir, "k", "v"))
+      q.awaitTermination(120000)
+    }
+    run("hll-ck")
+    def estimates(): Map[String, Long] =
+      SketchAggs.distinctEstimate(MergeSink.readAny(spark, stateDir).get)
+        .as[(String, Long)].collect().toMap
+    val e = estimates()
+    // small cardinalities sit in the sketch's exact regime
+    assert(e == Map("a" -> 100L, "b" -> 5L), s"got $e")
+
+    // redelivery: a fresh checkpoint re-sends every batch; register-
+    // idempotent union means estimates cannot inflate
+    run("hll-ck2")
+    assert(estimates() == e, "redelivery drifted")
   }
 
   test("streaming drift monitor: frozen-reference TV per batch, out-of-range mass clamps in, redelivery-stable") {
@@ -382,44 +379,41 @@ class StreamsSpec extends SparkTestBase {
       (1 to 100).map(_.toDouble),        // identical distribution → tv 0
       Seq.fill(50)(1.0),                 // all mass in bin 0 → tv 0.75
       (201 to 300).map(_.toDouble))      // fully out of range → clamps to top bin
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val refDir = tmpDir(s"dm-ref-$mode")
-      MergeSink.writeReplace(spark,
-        refDir, graft.ops.Stats.driftReference(refDf, "v", 4))
-      val flat = tmpDir(s"dm-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"dm-b$i-$mode")
-        rows.toDF("v").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val outDir = tmpDir(s"dm-out-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.driftMonitor(refDir, outDir, "v", tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"dm-ck-$mode")
-      def scores(): Map[Long, (Long, Double)] =
-        MergeSink.readAny(spark, outDir).get
-          .as[(Long, Long, Double)].collect()
-          .map(t => t._1 -> ((t._2, t._3))).toMap
-      val m = scores()
-      assert(m(0L) == ((100L, 0.0)), s"mode=$mode got $m")
-      assert(m(1L) == ((50L, 0.75)))
-      // every out-of-range value clamps into the top cell: drift, not loss
-      assert(m(2L) == ((100L, 0.75)))
-      run(s"dm-ck2-$mode")
-      assert(scores() == m, s"redelivery drifted, mode=$mode")
+    val refDir = tmpDir("dm-ref")
+    MergeSink.writeReplace(spark,
+      refDir, graft.ops.Stats.driftReference(refDf, "v", 4))
+    val flat = tmpDir("dm-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"dm-b$i")
+      rows.toDF("v").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val outDir = tmpDir("dm-out")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.driftMonitor(refDir, outDir, "v"))
+      q.awaitTermination(120000)
+    }
+    run("dm-ck")
+    def scores(): Map[Long, (Long, Double)] =
+      MergeSink.readAny(spark, outDir).get
+        .as[(Long, Long, Double)].collect()
+        .map(t => t._1 -> ((t._2, t._3))).toMap
+    val m = scores()
+    assert(m(0L) == ((100L, 0.0)), s"got $m")
+    assert(m(1L) == ((50L, 0.75)))
+    // every out-of-range value clamps into the top cell: drift, not loss
+    assert(m(2L) == ((100L, 0.75)))
+    run("dm-ck2")
+    assert(scores() == m, "redelivery drifted")
   }
 
   test("dedupWithinWatermark: duplicated input collapses to one row per key with bounded state") {
@@ -512,39 +506,36 @@ class StreamsSpec extends SparkTestBase {
       .select("user_id", "t_view", "t_click", "t_purchase")
       .collect().map(r => r.getLong(0) ->
         ((r.getTimestamp(1), r.getTimestamp(2), r.getTimestamp(3)))).toMap
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"ff-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"ff-b$i-$mode")
-        rows.coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val stateDir = tmpDir(s"ff-state-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.normalizeEventTime(Streams.parquetStream(spark, flat,
-            spark.read.parquet(flat).schema, maxFilesPerTrigger = 1), "ts"),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.funnelFold(stateDir, "user_id", "ts", steps, tx = tx))
-        q.awaitTermination(180000)
-      }
-      run(s"ff-ck-$mode")
-      def state() = MergeSink.readAny(spark, stateDir).get
-        .select("user_id", "t_view", "t_click", "t_purchase")
-        .collect().map(r => r.getLong(0) ->
-          ((r.getTimestamp(1), r.getTimestamp(2), r.getTimestamp(3)))).toMap
-      val got = state()
-      assert(got == expect, s"mode=$mode")
-      // min is idempotent: a fresh-checkpoint redelivery changes nothing
-      run(s"ff-ck2-$mode")
-      assert(state() == got, s"redelivery drifted, mode=$mode")
+    val flat = tmpDir("ff-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"ff-b$i")
+      rows.coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val stateDir = tmpDir("ff-state")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.normalizeEventTime(Streams.parquetStream(spark, flat,
+          spark.read.parquet(flat).schema, maxFilesPerTrigger = 1), "ts"),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.funnelFold(stateDir, "user_id", "ts", steps))
+      q.awaitTermination(180000)
+    }
+    run("ff-ck")
+    def state() = MergeSink.readAny(spark, stateDir).get
+      .select("user_id", "t_view", "t_click", "t_purchase")
+      .collect().map(r => r.getLong(0) ->
+        ((r.getTimestamp(1), r.getTimestamp(2), r.getTimestamp(3)))).toMap
+    val got = state()
+    assert(got == expect)
+    // min is idempotent: a fresh-checkpoint redelivery changes nothing
+    run("ff-ck2")
+    assert(state() == got, "redelivery drifted")
   }
 
   test("dropDuplicatesWithinWatermark dedups replayed events inside the horizon") {
@@ -591,38 +582,35 @@ class StreamsSpec extends SparkTestBase {
         Seq(col("g").as("group_key")), col("v"), col("id"), 3)
       .select("group_key", "tie", "val")
       .as[(String, String, Double)].collect().toSet
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"tk-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"tk-b$i-$mode")
-        rows.toDF("g", "id", "v").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val stateDir = tmpDir(s"tk-state-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.topkRowsFold(stateDir, "g", "v", "id", 3, tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"tk-ck-$mode")
-      def state() = MergeSink.readAny(spark, stateDir).get
-        .select("group_key", "tie", "val")
-        .as[(String, String, Double)].collect().toSet
-      val got = state()
-      assert(got == expect, s"mode=$mode")
-      // (val, tie) set semantics: fresh-checkpoint redelivery is a no-op
-      run(s"tk-ck2-$mode")
-      assert(state() == got, s"redelivery drifted, mode=$mode")
+    val flat = tmpDir("tk-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"tk-b$i")
+      rows.toDF("g", "id", "v").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val stateDir = tmpDir("tk-state")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.topkRowsFold(stateDir, "g", "v", "id", 3))
+      q.awaitTermination(120000)
+    }
+    run("tk-ck")
+    def state() = MergeSink.readAny(spark, stateDir).get
+      .select("group_key", "tie", "val")
+      .as[(String, String, Double)].collect().toSet
+    val got = state()
+    assert(got == expect)
+    // (val, tie) set semantics: fresh-checkpoint redelivery is a no-op
+    run("tk-ck2")
+    assert(state() == got, "redelivery drifted")
   }
 
   test("streaming cohort fold is order-free: an arbitrary batch split equals the batch retention matrix") {
@@ -635,40 +623,37 @@ class StreamsSpec extends SparkTestBase {
     val expect = graft.ops.Funnel.cohortRetention(events,
         col("user_id"), col("ts"))
       .as[(java.sql.Date, Long, Long)].collect().toSet
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"cf-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"cf-b$i-$mode")
-        rows.coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val firstDir = tmpDir(s"cf-first-$mode")
-      val actDir = tmpDir(s"cf-act-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.normalizeEventTime(Streams.parquetStream(spark, flat,
-            spark.read.parquet(flat).schema, maxFilesPerTrigger = 1), "ts"),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.cohortFold(firstDir, actDir, "user_id", "ts", tx = tx))
-        q.awaitTermination(180000)
-      }
-      run(s"cf-ck-$mode")
-      def matrix() = graft.ops.Funnel.cohortRetentionFromState(
-          MergeSink.readAny(spark, firstDir).get,
-          MergeSink.readAny(spark, actDir).get)
-        .as[(java.sql.Date, Long, Long)].collect().toSet
-      val got = matrix()
-      assert(got == expect, s"mode=$mode")
-      // min + set-union: fresh-checkpoint redelivery changes nothing
-      run(s"cf-ck2-$mode")
-      assert(matrix() == got, s"redelivery drifted, mode=$mode")
+    val flat = tmpDir("cf-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"cf-b$i")
+      rows.coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val firstDir = tmpDir("cf-first")
+    val actDir = tmpDir("cf-act")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.normalizeEventTime(Streams.parquetStream(spark, flat,
+          spark.read.parquet(flat).schema, maxFilesPerTrigger = 1), "ts"),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.cohortFold(firstDir, actDir, "user_id", "ts"))
+      q.awaitTermination(180000)
+    }
+    run("cf-ck")
+    def matrix() = graft.ops.Funnel.cohortRetentionFromState(
+        MergeSink.readAny(spark, firstDir).get,
+        MergeSink.readAny(spark, actDir).get)
+      .as[(java.sql.Date, Long, Long)].collect().toSet
+    val got = matrix()
+    assert(got == expect)
+    // min + set-union: fresh-checkpoint redelivery changes nothing
+    run("cf-ck2")
+    assert(matrix() == got, "redelivery drifted")
   }
 
   test("streaming count-min fold: batch-keyed contributions converge to one-shot counts and survive redelivery") {
@@ -679,44 +664,41 @@ class StreamsSpec extends SparkTestBase {
       Seq.fill(10)("a") ++ Seq.fill(3)("b"),
       Seq.fill(5)("a") ++ Seq.fill(4)("c"),
       Seq.fill(1)("b"))
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"cm-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"cm-b$i-$mode")
-        rows.map(Tuple1(_)).toDF("item").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val stateDir = tmpDir(s"cm-state-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.cmFold(stateDir, "item", d, w, tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"cm-ck-$mode")
-      def estimates(): Map[String, Long] = {
-        val st = MergeSink.readAny(spark, stateDir).get.select(col("cm"))
-        SketchAggs.cmEstimates(SketchAggs.foldCmState(st),
-            Seq("a", "b", "c"), d, w)
-          .as[(String, Long)].collect().toMap
-      }
-      val e = estimates()
-      assert(e == Map("a" -> 15L, "b" -> 4L, "c" -> 4L), s"mode=$mode got $e")
-      assert(MergeSink.readAny(spark, stateDir).get.count() == 3)
-      // fresh-checkpoint redelivery: batch_id keying drops duplicates —
-      // counter addition would otherwise double-count
-      run(s"cm-ck2-$mode")
-      assert(estimates() == e, s"redelivery drifted, mode=$mode")
-      assert(MergeSink.readAny(spark, stateDir).get.count() == 3)
+    val flat = tmpDir("cm-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"cm-b$i")
+      rows.map(Tuple1(_)).toDF("item").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val stateDir = tmpDir("cm-state")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.cmFold(stateDir, "item", d, w))
+      q.awaitTermination(120000)
+    }
+    run("cm-ck")
+    def estimates(): Map[String, Long] = {
+      val st = MergeSink.readAny(spark, stateDir).get.select(col("cm"))
+      SketchAggs.cmEstimates(SketchAggs.foldCmState(st),
+          Seq("a", "b", "c"), d, w)
+        .as[(String, Long)].collect().toMap
+    }
+    val e = estimates()
+    assert(e == Map("a" -> 15L, "b" -> 4L, "c" -> 4L), s"got $e")
+    assert(MergeSink.readAny(spark, stateDir).get.count() == 3)
+    // fresh-checkpoint redelivery: batch_id keying drops duplicates —
+    // counter addition would otherwise double-count
+    run("cm-ck2")
+    assert(estimates() == e, "redelivery drifted")
+    assert(MergeSink.readAny(spark, stateDir).get.count() == 3)
   }
 
   test("streaming manifest fold: additive fingerprint equals the one-shot manifest and survives redelivery") {
@@ -727,48 +709,45 @@ class StreamsSpec extends SparkTestBase {
       Seq((3L, Option.empty[String], "s1"), (4L, Some("cc"), "s2")),
       Seq((5L, Some("dd"), "s2")))
     val all = batches.flatten
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"mf-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"mf-b$i-$mode")
-        rows.toDF("id", "text", "src").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val stateDir = tmpDir(s"mf-state-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.manifestFold(stateDir, "src", "id", "text", tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"mf-ck-$mode")
-      def current() = Stats.manifestFromContributions(
-          MergeSink.readAny(spark, stateDir).get)
-        .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
-      val got = current()
-      // the fold must equal the one-shot manifest's additive columns
-      val oneShot = Stats.manifest(all.toDF("id", "text", "src"),
-          col("src"), col("id"), col("text"))
-        .select("group_key", "n_rows", "n_null_content", "content_sig")
-        .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
-      assert(got == oneShot, s"mode=$mode")
-      // one contribution row per (group, batch) that saw the group
-      assert(MergeSink.readAny(spark, stateDir).get.count() == 4)
-      run(s"mf-ck2-$mode")
-      assert(current() == got, s"redelivery drifted, mode=$mode")
-      assert(MergeSink.readAny(spark, stateDir).get.count() == 4)
+    val flat = tmpDir("mf-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"mf-b$i")
+      rows.toDF("id", "text", "src").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val stateDir = tmpDir("mf-state")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.manifestFold(stateDir, "src", "id", "text"))
+      q.awaitTermination(120000)
+    }
+    run("mf-ck")
+    def current() = Stats.manifestFromContributions(
+        MergeSink.readAny(spark, stateDir).get)
+      .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val got = current()
+    // the fold must equal the one-shot manifest's additive columns
+    val oneShot = Stats.manifest(all.toDF("id", "text", "src"),
+        col("src"), col("id"), col("text"))
+      .select("group_key", "n_rows", "n_null_content", "content_sig")
+      .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(got == oneShot)
+    // one contribution row per (group, batch) that saw the group
+    assert(MergeSink.readAny(spark, stateDir).get.count() == 4)
+    run("mf-ck2")
+    assert(current() == got, "redelivery drifted")
+    assert(MergeSink.readAny(spark, stateDir).get.count() == 4)
   }
 
-  test("streaming quantile fold: contribution-keyed KLL state converges and survives redelivery in both protocols") {
+  test("streaming quantile fold: contribution-keyed KLL state converges and survives redelivery") {
     import spark.implicits._
     import graft.functions.SketchAggs
     // per-key totals stay ≤ k=200, so every quantile is EXACT and the
@@ -777,53 +756,50 @@ class StreamsSpec extends SparkTestBase {
       (1 to 60).map(v => ("a", v.toDouble)) ++ (1 to 30).map(v => ("b", v.toDouble)),
       (61 to 120).map(v => ("a", v.toDouble)),
       (121 to 180).map(v => ("a", v.toDouble)))
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"kll-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"kll-b$i-$mode")
-        rows.toDF("k", "v").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val stateDir = tmpDir(s"kll-state-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.quantileFold(stateDir, "k", "v", tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"kll-ck-$mode")
-      def estimates(): Map[String, (Double, Double)] = {
-        val st = MergeSink.readAny(spark, stateDir).get
-          .select(col("key"), col("qsketch"))
-        SketchAggs.quantileEstimate(
-            SketchAggs.foldQuantileState(200, st), Seq(0.5, 1.0))
-          .as[(String, Double, Double)].collect()
-          .map(t => t._1 -> ((t._2, t._3))).toMap
-      }
-      val e = estimates()
-      assert(e == Map("a" -> ((90.0, 180.0)), "b" -> ((15.0, 30.0))),
-        s"mode=$mode got $e")
-      // one contribution row per (key, batch) that saw the key
-      val st = MergeSink.readAny(spark, stateDir).get
-      assert(st.count() == 4, s"mode=$mode")
-
-      // fresh-checkpoint redelivery: (key, batch) contribution keying
-      // drops every duplicate — estimates cannot re-weight
-      run(s"kll-ck2-$mode")
-      assert(estimates() == e, s"redelivery drifted, mode=$mode")
-      assert(MergeSink.readAny(spark, stateDir).get.count() == 4)
+    val flat = tmpDir("kll-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"kll-b$i")
+      rows.toDF("k", "v").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val stateDir = tmpDir("kll-state")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.quantileFold(stateDir, "k", "v"))
+      q.awaitTermination(120000)
+    }
+    run("kll-ck")
+    def estimates(): Map[String, (Double, Double)] = {
+      val st = MergeSink.readAny(spark, stateDir).get
+        .select(col("key"), col("qsketch"))
+      SketchAggs.quantileEstimate(
+          SketchAggs.foldQuantileState(200, st), Seq(0.5, 1.0))
+        .as[(String, Double, Double)].collect()
+        .map(t => t._1 -> ((t._2, t._3))).toMap
+    }
+    val e = estimates()
+    assert(e == Map("a" -> ((90.0, 180.0)), "b" -> ((15.0, 30.0))),
+      s"got $e")
+    // one contribution row per (key, batch) that saw the key
+    val st = MergeSink.readAny(spark, stateDir).get
+    assert(st.count() == 4)
+
+    // fresh-checkpoint redelivery: (key, batch) contribution keying
+    // drops every duplicate — estimates cannot re-weight
+    run("kll-ck2")
+    assert(estimates() == e, "redelivery drifted")
+    assert(MergeSink.readAny(spark, stateDir).get.count() == 4)
   }
 
-  test("streaming k-means fold routes batches to stable clusters and survives redelivery in both protocols") {
+  test("streaming k-means fold routes batches to stable clusters and survives redelivery") {
     import spark.implicits._
     import graft.ext.SimSearch
     def b1(i: Int) = Array(1.0f, 0.02f * (i % 3), 0.0f, 0.0f)
@@ -835,56 +811,53 @@ class StreamsSpec extends SparkTestBase {
         (8 until 12).map(i => (i.toLong, b2(i))),
       (12 until 16).map(i => (i.toLong, b2(i))),
       (16 until 20).map(i => (i.toLong, b1(i))))
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      val flat = tmpDir(s"km-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((rows, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"km-b$i-$mode")
-        rows.toDF("vec_id", "embedding").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val stateDir = tmpDir(s"km-state-$mode")
-      val assignDir = tmpDir(s"km-assign-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.kmeansFold(stateDir, assignDir, "vec_id", "embedding",
-            k = 2, lloydIters = 2, tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"km-ck-$mode")
-      def assignments(): Map[Long, Long] =
-        MergeSink.readAny(spark, assignDir).get
-          .select("id", "cluster_id").as[(Long, Long)].collect().toMap
-      val m = assignments()
-      assert(m.keySet == (0L until 20L).toSet, s"mode=$mode got ${m.keySet}")
-      // every blob-1 id (incl. batch-2 arrivals) shares one cluster,
-      // every blob-2 id the other
-      val g1 = ((0L until 8L) ++ (16L until 20L)).map(m).toSet
-      val g2 = ((8L until 16L)).map(m).toSet
-      assert(g1.size == 1 && g2.size == 1 && g1 != g2, s"mode=$mode m=$m")
-      // state: one contribution row per (cluster, batch) that had members
-      val contrib = MergeSink.readAny(spark, stateDir).get
-      assert(contrib.select(sum(col("n"))).head().getLong(0) == 20L)
-      val cents = SimSearch.kmCentroids(
-        SimSearch.KmIndex(contrib, 2, 4))
-      assert(cents.length == 2)
-
-      // fresh-checkpoint redelivery: same epochs, same batch ids → the
-      // fold no-ops and both tables hold exactly the same values
-      run(s"km-ck2-$mode")
-      assert(assignments() == m, s"redelivery moved assignments, mode=$mode")
-      val contrib2 = MergeSink.readAny(spark, stateDir).get
-      assert(contrib2.collect().toSet == contrib.collect().toSet,
-        s"redelivery drifted state, mode=$mode")
+    val flat = tmpDir("km-flat"); new java.io.File(flat).mkdirs()
+    for ((rows, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"km-b$i")
+      rows.toDF("vec_id", "embedding").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val stateDir = tmpDir("km-state")
+    val assignDir = tmpDir("km-assign")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.kmeansFold(stateDir, assignDir, "vec_id", "embedding",
+          k = 2, lloydIters = 2))
+      q.awaitTermination(120000)
+    }
+    run("km-ck")
+    def assignments(): Map[Long, Long] =
+      MergeSink.readAny(spark, assignDir).get
+        .select("id", "cluster_id").as[(Long, Long)].collect().toMap
+    val m = assignments()
+    assert(m.keySet == (0L until 20L).toSet, s"got ${m.keySet}")
+    // every blob-1 id (incl. batch-2 arrivals) shares one cluster,
+    // every blob-2 id the other
+    val g1 = ((0L until 8L) ++ (16L until 20L)).map(m).toSet
+    val g2 = ((8L until 16L)).map(m).toSet
+    assert(g1.size == 1 && g2.size == 1 && g1 != g2, s"m=$m")
+    // state: one contribution row per (cluster, batch) that had members
+    val contrib = MergeSink.readAny(spark, stateDir).get
+    assert(contrib.select(sum(col("n"))).head().getLong(0) == 20L)
+    val cents = SimSearch.kmCentroids(
+      SimSearch.KmIndex(contrib, 2, 4))
+    assert(cents.length == 2)
+
+    // fresh-checkpoint redelivery: same epochs, same batch ids → the
+    // fold no-ops and both tables hold exactly the same values
+    run("km-ck2")
+    assert(assignments() == m, "redelivery moved assignments")
+    val contrib2 = MergeSink.readAny(spark, stateDir).get
+    assert(contrib2.collect().toSet == contrib.collect().toSet,
+      "redelivery drifted state")
   }
 
   test("incremental segment dedup folds streamed batches against persisted counts") {
@@ -900,63 +873,60 @@ class StreamsSpec extends SparkTestBase {
           4L -> s"$pair one two three four five six seven eight",
           5L -> pair))                              // pair: 2 in-batch → cut both
 
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "rename"
-      // driver-side sequential fold = the expected streaming outcome
-      var idx = Dedup.emptySegmentIndex(spark)
-      val expected = batches.flatMap { b =>
-        val (clean, delta) = Dedup.incrementalSegmentDedup(
-          b.toDF("doc_id", "text"), "doc_id", "text", idx,
-          window = 8, minDocs = 2)
-        idx = Dedup.foldSegmentIndex(idx, delta).localCheckpoint()
-        clean.as[(Long, String, Long, Long)].collect()
-      }.sortBy(_._1)
-      assert(expected.map(t => (t._1, t._2)).toSeq == Seq(
-        (1L, s"$boiler $uniqA"), (3L, uniqB),
-        (4L, "one two three four five six seven eight"), (5L, "")),
-        "fixture sanity: cross-batch + in-batch cuts land where expected")
+    // driver-side sequential fold = the expected streaming outcome
+    var idx = Dedup.emptySegmentIndex(spark)
+    val expected = batches.flatMap { b =>
+      val (clean, delta) = Dedup.incrementalSegmentDedup(
+        b.toDF("doc_id", "text"), "doc_id", "text", idx,
+        window = 8, minDocs = 2)
+      idx = Dedup.foldSegmentIndex(idx, delta).localCheckpoint()
+      clean.as[(Long, String, Long, Long)].collect()
+    }.sortBy(_._1)
+    assert(expected.map(t => (t._1, t._2)).toSeq == Seq(
+      (1L, s"$boiler $uniqA"), (3L, uniqB),
+      (4L, "one two three four five six seven eight"), (5L, "")),
+      "fixture sanity: cross-batch + in-batch cuts land where expected")
 
-      val flat = tmpDir(s"segfold-flat-$mode"); new java.io.File(flat).mkdirs()
-      for ((docs, i) <- batches.zipWithIndex) {
-        val one = tmpDir(s"segfold-b$i-$mode")
-        docs.toDF("doc_id", "text").coalesce(1).write.parquet(one)
-        val part = new java.io.File(one).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val countsDir = tmpDir(s"segfold-counts-$mode")
-      val cleanDir = tmpDir(s"segfold-clean-$mode")
-      def run(ck: String) = {
-        val q = Streams.toMergeSink(
-          Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-            maxFilesPerTrigger = 1),
-          tmpDir(ck), Trigger.AvailableNow())(
-          Streams.Sinks.segmentFold(countsDir, cleanDir,
-            window = 8, minDocs = 2, tx = tx))
-        q.awaitTermination(120000)
-      }
-      run(s"segfold-ck-$mode")
-      val got = MergeSink.readAny(spark, cleanDir).get
-        .select("doc_id", "clean_text", "n_segs", "segs_removed")
-        .as[(Long, String, Long, Long)].collect().sortBy(_._1)
-      assert(got.toSeq == expected.toSeq, s"mode=$mode")
-
-      // at-least-once redelivery: fresh checkpoint re-sends every batch;
-      // contribution inserts dedupe on (seg_hash, batch_id), the probe
-      // excludes own prior contribution — output must be byte-stable
-      run(s"segfold-ck2-$mode")
-      val refolded = MergeSink.readAny(spark, cleanDir).get
-        .select("doc_id", "clean_text", "n_segs", "segs_removed")
-        .as[(Long, String, Long, Long)].collect().sortBy(_._1)
-      assert(refolded.toSeq == expected.toSeq, s"redelivery drifted, mode=$mode")
-      // counts hold ONE contribution row per (segment, batch)
-      val ck = MergeSink.readAny(spark, countsDir).get
-      assert(ck.groupBy("seg_hash", "batch_id").count()
-        .filter(col("count") > 1).count() == 0, s"mode=$mode")
+    val flat = tmpDir("segfold-flat"); new java.io.File(flat).mkdirs()
+    for ((docs, i) <- batches.zipWithIndex) {
+      val one = tmpDir(s"segfold-b$i")
+      docs.toDF("doc_id", "text").coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(flat, s"b$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
+    val countsDir = tmpDir("segfold-counts")
+    val cleanDir = tmpDir("segfold-clean")
+    def run(ck: String) = {
+      val q = Streams.toMergeSink(
+        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+          maxFilesPerTrigger = 1),
+        tmpDir(ck), Trigger.AvailableNow())(
+        Streams.Sinks.segmentFold(countsDir, cleanDir,
+          window = 8, minDocs = 2))
+      q.awaitTermination(120000)
+    }
+    run("segfold-ck")
+    val got = MergeSink.readAny(spark, cleanDir).get
+      .select("doc_id", "clean_text", "n_segs", "segs_removed")
+      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
+    assert(got.toSeq == expected.toSeq)
+
+    // at-least-once redelivery: fresh checkpoint re-sends every batch;
+    // contribution inserts dedupe on (seg_hash, batch_id), the probe
+    // excludes own prior contribution — output must be byte-stable
+    run("segfold-ck2")
+    val refolded = MergeSink.readAny(spark, cleanDir).get
+      .select("doc_id", "clean_text", "n_segs", "segs_removed")
+      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
+    assert(refolded.toSeq == expected.toSeq, "redelivery drifted")
+    // counts hold ONE contribution row per (segment, batch)
+    val ck = MergeSink.readAny(spark, countsDir).get
+    assert(ck.groupBy("seg_hash", "batch_id").count()
+      .filter(col("count") > 1).count() == 0)
   }
 
   test("incremental clustering folds streamed batch edges into persisted labels") {
@@ -990,43 +960,39 @@ class StreamsSpec extends SparkTestBase {
         n = 1, k = 32, bands = 4, threshold = 0.6))
       .as[(Long, Long)].collect().toMap
 
-    // the first-class sink, both commit protocols: the label table is a
+    // the first-class sink: the label table is a
     // partition-scoped DELTA upsert (never a full rewrite)
-    for (tx <- Seq(false, true)) {
-      val mode = if (tx) "tx" else "ren"
-      val sigDir = tmpDir(s"clust-sig-$mode")
-      val bandDir = tmpDir(s"clust-band-$mode")
-      val labelsDir = tmpDir(s"clust-labels-$mode")
-      val stream = Streams.parquetStream(spark, flat,
-        spark.read.parquet(flat).schema, maxFilesPerTrigger = 1)
-      val q = Streams.toMergeSink(stream, tmpDir(s"clust-ck-$mode"),
-        Trigger.AvailableNow())(
-        Streams.Sinks.clusterFold(sigDir, bandDir, labelsDir,
-          n = 1, k = 32, bands = 4, threshold = 0.6, tx = tx))
-      q.awaitTermination(120000)
+    val sigDir = tmpDir("clust-sig")
+    val bandDir = tmpDir("clust-band")
+    val labelsDir = tmpDir("clust-labels")
+    val stream = Streams.parquetStream(spark, flat,
+      spark.read.parquet(flat).schema, maxFilesPerTrigger = 1)
+    val q = Streams.toMergeSink(stream, tmpDir("clust-ck"),
+      Trigger.AvailableNow())(
+      Streams.Sinks.clusterFold(sigDir, bandDir, labelsDir,
+        n = 1, k = 32, bands = 4, threshold = 0.6))
+    q.awaitTermination(120000)
 
-      val folded = MergeSink.readAny(spark, labelsDir).get
-        .select("doc_id", "cluster_id")
-        .as[(Long, Long)].collect().toMap
-      assert(folded == batchLabels, s"mode=$mode")
-      assert(folded == Map(1L -> 1L, 3L -> 1L, 6L -> 1L, 2L -> 2L, 5L -> 2L),
-        s"mode=$mode")
+    val folded = MergeSink.readAny(spark, labelsDir).get
+      .select("doc_id", "cluster_id")
+      .as[(Long, Long)].collect().toMap
+    assert(folded == batchLabels)
+    assert(folded == Map(1L -> 1L, 3L -> 1L, 6L -> 1L, 2L -> 2L, 5L -> 2L))
 
-      // at-least-once redelivery: a fresh checkpoint re-sends EVERY batch
-      // through the same sinks; re-folded edges yield an empty remap, the
-      // index appends dedupe — labels must be byte-for-byte stable
-      val q2 = Streams.toMergeSink(
-        Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
-          maxFilesPerTrigger = 1),
-        tmpDir(s"clust-ck2-$mode"), Trigger.AvailableNow())(
-        Streams.Sinks.clusterFold(sigDir, bandDir, labelsDir,
-          n = 1, k = 32, bands = 4, threshold = 0.6, tx = tx))
-      q2.awaitTermination(120000)
-      val refolded = MergeSink.readAny(spark, labelsDir).get
-        .select("doc_id", "cluster_id")
-        .as[(Long, Long)].collect().toMap
-      assert(refolded == batchLabels, s"redelivery changed labels, mode=$mode")
-    }
+    // at-least-once redelivery: a fresh checkpoint re-sends EVERY batch
+    // through the same sinks; re-folded edges yield an empty remap, the
+    // index appends dedupe — labels must be byte-for-byte stable
+    val q2 = Streams.toMergeSink(
+      Streams.parquetStream(spark, flat, spark.read.parquet(flat).schema,
+        maxFilesPerTrigger = 1),
+      tmpDir("clust-ck2"), Trigger.AvailableNow())(
+      Streams.Sinks.clusterFold(sigDir, bandDir, labelsDir,
+        n = 1, k = 32, bands = 4, threshold = 0.6))
+    q2.awaitTermination(120000)
+    val refolded = MergeSink.readAny(spark, labelsDir).get
+      .select("doc_id", "cluster_id")
+      .as[(Long, Long)].collect().toMap
+    assert(refolded == batchLabels, "redelivery changed labels")
   }
 
   test("streaming corpus pipeline (dedup -> curation -> packing) equals the one-shot batch run") {
@@ -1113,58 +1079,43 @@ class StreamsSpec extends SparkTestBase {
     assert(packSnap(packedStream) == packSnap(packedAll))
   }
 
-  test("every Sinks family yields identical contents under both commit protocols") {
+  test("every Sinks family applies its merge mode through the rename swap") {
     import spark.implicits._
     val b1 = Seq((1L, "open", "n1"), (2L, "open", "n2")).toDF("k", "status", "note")
     val b2 = Seq((2L, "closed", "IGNORED"), (3L, "open", "n3"))
       .toDF("k", "status", "note")
-    def apply2(mk: (String, Boolean) => (org.apache.spark.sql.SparkSession,
+    def apply2(mk: String => (org.apache.spark.sql.SparkSession,
         org.apache.spark.sql.DataFrame, Long) => Unit, tag: String)
-        : (Set[(Long, String, String)], Set[(Long, String, String)]) = {
-      val dF = tmpDir(s"sf-$tag"); val dT = tmpDir(s"st-$tag")
-      val (fs, tx) = (mk(dF, false), mk(dT, true))
-      for ((b, i) <- Seq(b1, b2).zipWithIndex) {
-        fs(spark, b, i.toLong); tx(spark, b, i.toLong)
-      }
-      def snap(d: String) = MergeSink.readAny(spark, d).get
-        .select("k", "status", "note").as[(Long, String, String)].collect().toSet
-      assert(graft.merge.TxTable.exists(spark, dT), tag)
-      assert(!graft.merge.TxTable.exists(spark, dF), tag)
-      (snap(dF), snap(dT))
+        : Set[(Long, String, String)] = {
+      val d = tmpDir(s"sink-$tag"); val sink = mk(d)
+      for ((b, i) <- Seq(b1, b2).zipWithIndex) sink(spark, b, i.toLong)
+      assert(!graft.merge.TxTable.exists(spark, d), tag)
+      spark.read.parquet(d).select("k", "status", "note")
+        .as[(Long, String, String)].collect().toSet
     }
-    val (u1, u2) = apply2((d, t) =>
-      Streams.Sinks.upsertPartial(d, Seq("k"), Seq("status"), tx = t), "upsert")
-    assert(u1 == u2 && u1 == Set((1L, "open", "n1"), (2L, "closed", "n2"),
-      (3L, "open", "n3")))
-    val (s1, s2) = apply2((d, t) =>
-      Streams.Sinks.scd2(d, "k", Seq("status"), tx = t), "scd2")
-    assert(s1 == s2 && s1 == u1) // M2 ≡ M1 on a single key
-    val (i1, i2) = apply2((d, t) =>
-      Streams.Sinks.insertIfAbsent(d, Seq("k"), tx = t), "insert")
-    assert(i1 == i2 && i1 == Set((1L, "open", "n1"), (2L, "open", "n2"),
-      (3L, "open", "n3"))) // conflict on k=2 dropped, first-seen kept
+    val u = apply2(Streams.Sinks.upsertPartial(_, Seq("k"), Seq("status")), "upsert")
+    assert(u == Set((1L, "open", "n1"), (2L, "closed", "n2"), (3L, "open", "n3")))
+    // M2 ≡ M1 on a single key
+    assert(apply2(Streams.Sinks.scd2(_, "k", Seq("status")), "scd2") == u)
+    // conflict on k=2 dropped, first-seen kept
+    assert(apply2(Streams.Sinks.insertIfAbsent(_, Seq("k")), "insert") ==
+      Set((1L, "open", "n1"), (2L, "open", "n2"), (3L, "open", "n3")))
   }
 
-  test("Sinks.upsertScoped binds the partition-scoped merge in both protocols") {
+  test("Sinks.upsertScoped binds the partition-scoped merge") {
     import spark.implicits._
     val scheme = MergeSink.PartitionScheme.keyHash(Seq("k"), 8)
-    val dirFs = tmpDir("sink-scoped-fs"); val dirTx = tmpDir("sink-scoped-tx")
+    val dir = tmpDir("sink-scoped")
     val b1 = Seq(("k1", "open"), ("k2", "open")).toDF("k", "status")
     val b2 = Seq(("k2", "closed")).toDF("k", "status")
-    val sinkFs = Streams.Sinks.upsertScoped(dirFs, Seq("k"), Seq("status"),
-      scheme, tx = false)
-    val sinkTx = Streams.Sinks.upsertScoped(dirTx, Seq("k"), Seq("status"),
-      scheme, tx = true)
-    for ((b, i) <- Seq(b1, b2).zipWithIndex) {
-      sinkFs(spark, b, i.toLong); sinkTx(spark, b, i.toLong)
-    }
-    def snap(dir: String) = MergeSink.readAny(spark, dir).get
-      .select("k", "status").as[(String, String)].collect().toMap
-    assert(snap(dirFs) == Map("k1" -> "open", "k2" -> "closed"))
-    assert(snap(dirTx) == snap(dirFs))
-    // same semantics, different commit protocol underneath
-    assert(graft.merge.TxTable.exists(spark, dirTx))
-    assert(!graft.merge.TxTable.exists(spark, dirFs))
+    val sink = Streams.Sinks.upsertScoped(dir, Seq("k"), Seq("status"), scheme)
+    for ((b, i) <- Seq(b1, b2).zipWithIndex) sink(spark, b, i.toLong)
+    val target = spark.read.parquet(dir)
+    assert(target.select("k", "status").as[(String, String)].collect().toMap ==
+      Map("k1" -> "open", "k2" -> "closed"))
+    // the scoped layout: rows land in hash-bucket partition directories
+    assert(target.columns.contains(scheme.colName))
+    assert(!graft.merge.TxTable.exists(spark, dir))
   }
 
   test("streaming embedding batches fold through the persisted semantic index") {
@@ -1220,101 +1171,16 @@ class StreamsSpec extends SparkTestBase {
       .as[Long].collect().toSet == Set(10L, 20L, 15L))
   }
 
-  test("tx-mode streaming corpus pipeline equals the one-shot batch run") {
-    import spark.implicits._
-    import graft.ext.{Corpus, Curation, Dedup}
-    import graft.merge.TxTable
-
-    // env-switch resolution is what Main and a deployment share
-    assert(!Streams.Sinks.txEnabled(Map.empty))
-    assert(Streams.Sinks.txEnabled(Map("GRAFT_TX_SINKS" -> "1")))
-    assert(Streams.Sinks.txEnabled(Map("GRAFT_TX_SINKS" -> " TRUE ")))
-
-    // same corpus and operators as the rename-swap parity case above —
-    // the ONLY difference is the commit protocol behind every target
-    val textA = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    val textB = "one two three four five six seven eight nine ten eleven twelve"
-    val textC = "crimson amber cobalt viridian ochre sienna umber teal magenta cyan"
-    val textD = "quartz basalt gneiss schist marble granite slate obsidian pumice chert"
-    val batches = Seq(
-      Seq(10L -> textA, 20L -> textB),
-      Seq(30L -> textA, 40L -> textC, 15L -> "tiny scrap"),
-      Seq(50L -> textB, 60L -> textD, 70L -> textC))
-    val allDocs = batches.flatten.toDF("doc_id", "text")
-    val (asgAll, _) = Dedup.incrementalAssignments(allDocs, "doc_id", "text",
-      Dedup.emptyIndex(spark), threshold = 0.6)
-    val curatedAll = Curation.curate(allDocs.join(
-      asgAll.filter(col("keeper_id") === col("doc_id")).select("doc_id"),
-      Seq("doc_id"), "left_semi"))
-
-    val flat = tmpDir("txcorpus-flat"); new java.io.File(flat).mkdirs()
-    for ((docs, i) <- batches.zipWithIndex) {
-      val one = tmpDir(s"txcorpus-b$i")
-      docs.toDF("doc_id", "text").coalesce(1).write.parquet(one)
-      val part = new java.io.File(one).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(flat, f"b$i%02d.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val sigDir = tmpDir("txcorpus-sig"); val bandDir = tmpDir("txcorpus-band")
-    val corpusDir = tmpDir("txcorpus-out")
-    // readAny reads the commit-log layout the tx sinks write
-    def loadIndex() = {
-      val empty = Dedup.emptyIndex(spark)
-      Dedup.DedupIndex(
-        MergeSink.readAny(spark, sigDir).getOrElse(empty.signatures),
-        MergeSink.readAny(spark, bandDir).getOrElse(empty.bands))
-    }
-    val sinkSig = Streams.Sinks.appendDedup(sigDir, "doc_id", tx = true)
-    val sinkBand = Streams.Sinks.appendDedup(bandDir, "bk", tx = true)
-    val sinkCorpus = Streams.Sinks.appendDedup(corpusDir, "doc_id", tx = true)
-    val stream = Streams.parquetStream(spark, flat,
-      spark.read.parquet(flat).schema, maxFilesPerTrigger = 1)
-    val q = Streams.toMergeSink(stream, tmpDir("txcorpus-ck"),
-      Trigger.AvailableNow()) { (s, batch, id) =>
-      val (assign, delta) = Dedup.incrementalAssignments(
-        batch, "doc_id", "text", loadIndex(), threshold = 0.6)
-      sinkSig(s, delta.signatures, id)
-      sinkBand(s, delta.bands.withColumn("bk",
-        concat_ws("#", col("doc_id"), col("band_id"))), id)
-      val kept = batch.join(
-        assign.filter(col("keeper_id") === col("doc_id")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      sinkCorpus(s, Curation.curate(kept), id)
-    }
-    q.awaitTermination(120000)
-
-    // targets genuinely carry the commit log (one commit per emitting batch)
-    assert(TxTable.exists(spark, sigDir) && TxTable.exists(spark, corpusDir))
-    assert(TxTable.versions(spark, corpusDir).nonEmpty)
-    val curatedStream = MergeSink.readAny(spark, corpusDir).get
-    def snap(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "n_tokens", "text").as[(Long, Long, String)]
-        .collect().toSet
-    assert(snap(curatedStream) == snap(curatedAll))
-    assert(snap(curatedStream).map(_._1) == Set(10L, 20L, 40L, 60L))
-    // ...and the published pack table is identical pack-for-pack
-    def packSnap(df: org.apache.spark.sql.DataFrame) =
-      Corpus.packSequences(df, col("doc_id"), col("text"), capacity = 16,
-          nShards = 2)
-        .select("doc_id", "shard", "pack_id", "pack_offset", "n_tokens")
-        .as[(Long, Int, Long, Long, Long)].collect().toSet
-    assert(packSnap(curatedStream) == packSnap(curatedAll))
-  }
-
   /** Restart-recovery contract: a streaming corpus query stopped mid-corpus
     * restarts against the SAME checkpoint dir (a NEW query, same sinks) and
     * converges to the one-shot batch result. The restart also REPLAYS its
     * last micro-batch — the checkpoint's final commit marker is deleted to
     * reproduce the real crash window (sink wrote, checkpoint commit didn't
     * land) — so the idempotent-sink + checkpoint design is exercised on
-    * exactly the path a crash takes, in both commit protocols. */
-  private def restartRecoveryCase(tx: Boolean): Unit = {
+    * exactly the path a crash takes. */
+  test("restart recovery: rename-mode corpus stream resumes from its checkpoint") {
     import spark.implicits._
     import graft.ext.{Curation, Dedup}
-    val tag = if (tx) "tx" else "fs"
     val textA = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     val textB = "one two three four five six seven eight nine ten eleven twelve"
     val textC = "crimson amber cobalt viridian ochre sienna umber teal magenta cyan"
@@ -1333,9 +1199,9 @@ class StreamsSpec extends SparkTestBase {
       asgAll.filter(col("keeper_id") === col("doc_id")).select("doc_id"),
       Seq("doc_id"), "left_semi"))
 
-    val flat = tmpDir(s"restart-$tag-flat"); new java.io.File(flat).mkdirs()
+    val flat = tmpDir("restart-flat"); new java.io.File(flat).mkdirs()
     def stage(i: Int): Unit = {
-      val one = tmpDir(s"restart-$tag-b$i")
+      val one = tmpDir(s"restart-b$i")
       batches(i).toDF("doc_id", "text").coalesce(1).write.parquet(one)
       val part = new java.io.File(one).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -1344,19 +1210,19 @@ class StreamsSpec extends SparkTestBase {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
     }
-    val ck = tmpDir(s"restart-$tag-ck")
-    val sigDir = tmpDir(s"restart-$tag-sig")
-    val bandDir = tmpDir(s"restart-$tag-band")
-    val corpusDir = tmpDir(s"restart-$tag-out")
+    val ck = tmpDir("restart-ck")
+    val sigDir = tmpDir("restart-sig")
+    val bandDir = tmpDir("restart-band")
+    val corpusDir = tmpDir("restart-out")
     def loadIndex() = {
       val empty = Dedup.emptyIndex(spark)
       Dedup.DedupIndex(
         MergeSink.readAny(spark, sigDir).getOrElse(empty.signatures),
         MergeSink.readAny(spark, bandDir).getOrElse(empty.bands))
     }
-    val sinkSig = Streams.Sinks.appendDedup(sigDir, "doc_id", tx = tx)
-    val sinkBand = Streams.Sinks.appendDedup(bandDir, "bk", tx = tx)
-    val sinkCorpus = Streams.Sinks.appendDedup(corpusDir, "doc_id", tx = tx)
+    val sinkSig = Streams.Sinks.appendDedup(sigDir, "doc_id")
+    val sinkBand = Streams.Sinks.appendDedup(bandDir, "bk")
+    val sinkCorpus = Streams.Sinks.appendDedup(corpusDir, "doc_id")
     def startQuery(): org.apache.spark.sql.streaming.StreamingQuery =
       Streams.toMergeSink(
         Streams.parquetStream(spark, flat,
@@ -1402,7 +1268,7 @@ class StreamsSpec extends SparkTestBase {
       df.select("doc_id", "n_tokens", "text").as[(Long, Long, String)]
         .collect().toSet
     assert(snap(curatedStream) == snap(curatedAll),
-      s"restarted stream diverged from one-shot batch (tx=$tx)")
+      "restarted stream diverged from one-shot batch")
     assert(snap(curatedStream).map(_._1) == Set(10L, 20L, 40L, 60L))
     // the index also converged to exactly the DEDUP-kept representatives
     // (15 is unique so dedup keeps it; the curation quality gate drops it
@@ -1411,13 +1277,6 @@ class StreamsSpec extends SparkTestBase {
       .as[Long].collect().toSet == Set(10L, 15L, 20L, 40L, 60L))
   }
 
-  test("restart recovery: rename-mode corpus stream resumes from its checkpoint") {
-    restartRecoveryCase(tx = false)
-  }
-
-  test("restart recovery: tx-mode corpus stream resumes from its checkpoint") {
-    restartRecoveryCase(tx = true)
-  }
 
   test("windowed counts with watermark produce sane totals") {
     val srcDir = tmpDir("wstream-src")
