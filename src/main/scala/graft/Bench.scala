@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 object Bench {
@@ -105,36 +106,106 @@ object Bench {
     }
   } catch { case _: Throwable => -1 }
 
+  /** Query harness over `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1):
+    *
+    *  - no arguments: time every `SparkEntry.queries` path and print (and
+    *    write to `SPARK_GRAFT_BENCH_OUT`) one JSON line `{"metric":"total",...}`;
+    *  - `explain q…`: print each query's formatted physical plan (default:
+    *    five scan/aggregate/watermark paths);
+    *  - `profile q[:reps]…`: time each query `reps` times (default 3) and
+    *    print the last rep's Spark jobs, slowest first, so "where do a
+    *    query's seconds go" is a measured fact, not a guess.
+    */
   def main(args: Array[String]): Unit = {
     val loadavgStart = String.format(java.util.Locale.ROOT, "%.2f",
       Double.box(java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage))
     val javaProcsStart = javaProcs()
+    val mode = args.headOption
+    require(mode.forall(Set("explain", "profile")),
+      s"usage: Bench [explain q... | profile q[:reps]...], got ${args.mkString(" ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.ts is parquet TIMESTAMP(NANOS); see Tables.load.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession.getOrCreate("graft-bench")
     // session warmup: datasource + codegen infrastructure init, so the first
     // measured query isn't charged ~8s of one-off JVM setup
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
+    // the timed modes run each query once here first (see total)
+    val warmDir =
+      if (new java.io.File("/root/testdata/sf0.001").isDirectory) "/root/testdata/sf0.001"
+      else sfDir // fall back to the measured dir rather than silently skipping
+    mode match {
+      case Some("explain") => explain(spark, sfDir, args.tail.toSeq)
+      case Some("profile") => profile(spark, sfDir, warmDir, args.tail.toSeq)
+      case _ => total(spark, sfDir, warmDir, loadavgStart, javaProcsStart)
+    }
+    spark.stop()
+  }
+
+  private def explain(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
+    val names = if (args.nonEmpty) args else
+      Seq("q01_pricing_summary", "q02_incremental_scan", "q03_customer_geo",
+        "q04_orders_rollup", "q15_watermark_scan")
+    names.foreach { n =>
+      println(s"========== $n ==========")
+      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    }
+  }
+
+  private def profile(spark: SparkSession, sfDir: String, warmDir: String,
+                      args: Seq[String]): Unit = {
+    // job ledger: (jobId -> (desc, startNs)); closed jobs accumulate
+    val open = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val closed = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val d = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        open.put(js.jobId, (d, System.nanoTime()))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+        val v = open.remove(je.jobId)
+        if (v != null) closed.add((v._1, (System.nanoTime() - v._2) / 1e9))
+      }
+    })
+    for (a <- args) {
+      val (name, reps) = a.split(':') match {
+        case Array(n, r) => (n, r.toInt)
+        case Array(n) => (n, 3)
+      }
+      val fn = SparkEntry.queries(name)
+      try fn(spark, warmDir).count()
+      catch { case e: Throwable => System.err.println(s"[profile] warmup $name: $e") }
+      val times = (1 to reps).map { i =>
+        closed.clear()
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        if (i == reps) {
+          // last rep: print the job ledger, slowest first
+          import scala.jdk.CollectionConverters._
+          val jobs = closed.asScala.toSeq
+          val tot = jobs.map(_._2).sum
+          println(f"== $name rep$i wall=$wall%.3f s, ${jobs.size} jobs, job-sum=$tot%.3f s")
+          jobs.sortBy(-_._2).take(25).foreach { case (d, t) =>
+            println(f"   $t%8.3f  ${d.take(110)}")
+          }
+        }
+        wall
+      }
+      println(f"== $name min=${times.min}%.3f med=${times.sorted.apply(times.size / 2)}%.3f times=${times.map(t => f"$t%.2f").mkString(",")}")
+    }
+  }
+
+  private def total(spark: SparkSession, sfDir: String, warmDir: String,
+                    loadavgStart: String, javaProcsStart: Int): Unit = {
     // steady-state warmup: run every query once at the smallest SF so the
     // measured numbers are data-path throughput, not first-call plan
     // compilation (janino compile of a wide aggregate alone is ~2 s). A
     // production cycle re-runs the same plans every 30 s — warm codegen IS
     // the steady state, and Spark's codegen cache keys on generated source,
     // so the sf0.001 run compiles the same classes the measured run uses.
-    val warmDir =
-      if (new java.io.File("/root/testdata/sf0.001").isDirectory) "/root/testdata/sf0.001"
-      else sfDir // fall back to the measured dir rather than silently skipping
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
       try fn(spark, warmDir).count()
       catch { case e: Throwable => System.err.println(s"[bench] warmup $n: $e") }
@@ -298,6 +369,5 @@ object Bench {
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: $e") }
-    spark.stop()
   }
 }

@@ -27,28 +27,25 @@ import graft.sources.Jdbc
   *                            exists in this environment; the binding is the
   *                            same pushdown reader ApiSurfaceSpec covers.
   *  - `GRAFT_CYCLES`          cycle count (default: run forever)
-  *  - `GRAFT_MASTER`          master when not launched via spark-submit
+  *  - `GRAFT_COMPACT_EVERY_CYCLES` / `GRAFT_COMPACT_MAX_FILES`
+  *                            event-log compaction cadence (default 120 / 256)
+  *
+  * The session comes from [[EngineSession]]: `GRAFT_LOG_LEVEL` sets the log
+  * level, and outside spark-submit `SPARK_GRAFT_CPUS` sizes the local master.
   *
   * Every target commits through MergeSink's rename-swap protocol (see
   * `ScenarioPipeline.streams`).
   *
-  * With neither source set, the deterministic demo corpus is used — that
-  * path is the smoke test (MainSmokeSpec).
+  * With neither source set, the six streams run over the deterministic
+  * `ReferenceFixtures` corpus — the local demo (`GRAFT_CYCLES=3`) and the
+  * path MainSmokeSpec tests.
   */
 object Main {
   def main(args: Array[String]): Unit = run(sys.env)
 
   def run(env: Map[String, String]): Unit = {
     val conf = EngineConf.fromEnv(env)
-    val builder = SparkSession.builder()
-      .appName("graft-etl")
-      .config("spark.sql.session.timeZone", "UTC")
-    // spark-submit supplies the master; standalone/dev runs default local
-    if (!sys.props.contains("spark.master"))
-      builder.master(env.getOrElse("GRAFT_MASTER",
-        s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(env.getOrElse("GRAFT_LOG_LEVEL", "WARN"))
+    val spark = EngineSession.getOrCreate("graft-etl", env)
 
     val wh = env.getOrElse("GRAFT_WAREHOUSE", "/tmp/graft_warehouse")
     val boot = new Bootstrap(spark, wh)

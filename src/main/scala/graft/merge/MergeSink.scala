@@ -38,9 +38,7 @@ object MergeSink {
   def readTarget(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (TxTable.exists(spark, dir))
-      throw new IllegalStateException(s"$dir holds a TxTable commit log: " +
-        "read it with readAny; rename-swap sinks cannot write it")
+    refuseTxTable(spark, dir)
     recover(spark, dir)
     if (fs.exists(p) && fs.listStatus(p).nonEmpty)
       try Some(spark.read.parquet(dir))
@@ -51,6 +49,11 @@ object MergeSink {
       }
     else None
   }
+
+  private def refuseTxTable(spark: SparkSession, dir: String): Unit =
+    if (TxTable.exists(spark, dir))
+      throw new IllegalStateException(s"$dir holds a TxTable commit log: " +
+        "read it with readAny; rename-swap sinks cannot write it")
 
   /** Read a sink regardless of its commit protocol: a directory carrying a
     * TxTable log reads through the log's live set; anything else through
@@ -509,11 +512,15 @@ object MergeSink {
     * Crash-atomic: the live dir is renamed ASIDE (`__bak`) before the tmp
     * dir is renamed in — there is no window where the table is simply gone.
     * A crash inside the swap leaves a `__bak`/`__tmp` pair that [[recover]]
-    * rolls back on the next read or write. */
+    * rolls back on the next read or write.
+    *
+    * Throws, like [[readTarget]], on a directory that holds a [[TxTable]]
+    * log: the swap would replace the log and its history with plain files. */
   def writeReplace(spark: SparkSession, dir: String, df: DataFrame,
                    partitionCols: Seq[String] = Nil): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    refuseTxTable(spark, dir)
     recover(spark, dir)
     val tmp = new Path(dir + "__tmp")
     val bak = new Path(dir + "__bak")

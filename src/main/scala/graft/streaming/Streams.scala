@@ -227,7 +227,7 @@ object Streams {
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       import graft.functions.SketchAggs
       val delta = SketchAggs.distinctState(batch, col(key), col(value), lgK)
-      val folded = (MergeSink.readAny(s, stateDir) match {
+      val folded = (MergeSink.readTarget(s, stateDir) match {
         case Some(prev) => SketchAggs.foldDistinctState(
           prev.select(col("key"), col("sketch")), delta)
         case None => delta
@@ -346,7 +346,7 @@ object Streams {
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       require(steps.nonEmpty, "steps must not be empty")
       val stepCols = steps.map { case (n, _) => s"t_$n" }
-      val prevOpt = MergeSink.readAny(s, stateDir)
+      val prevOpt = MergeSink.readTarget(s, stateDir)
       val allUsers = batch.select(col(user).as("user_id")).distinct()
         .unionByName(prevOpt.map(_.select(col("user_id")))
           .getOrElse(batch.sparkSession.emptyDataFrame
@@ -396,7 +396,7 @@ object Streams {
       val bTop = SketchAggs.topkRows(batch, Seq(col(group).as("group_key")),
           col(value), col(tie), k)
         .select(col("group_key"), col("tie"), col("val"))
-      val folded = (MergeSink.readAny(s, stateDir) match {
+      val folded = (MergeSink.readTarget(s, stateDir) match {
         case Some(p) => SketchAggs.topkRows(
           p.select(col("group_key"), col("tie"), col("val"))
             .unionByName(bTop).distinct(),
@@ -420,7 +420,7 @@ object Streams {
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, _) => {
       val bFirst = batch.groupBy(col(user).as("user_id"))
         .agg(min(col(ts)).as("first_ts"))
-      val merged = (MergeSink.readAny(s, firstDir) match {
+      val merged = (MergeSink.readTarget(s, firstDir) match {
         case Some(p) => p.unionByName(bFirst)
           .groupBy(col("user_id")).agg(min(col("first_ts")).as("first_ts"))
         case None => bFirst
@@ -448,7 +448,7 @@ object Streams {
         : (SparkSession, DataFrame, Long) => Unit = (s, batch, epoch) => {
       import graft.ext.SimSearch
       val bid = s"b$epoch"
-      val (out, newContrib) = MergeSink.readAny(s, stateDir) match {
+      val (out, newContrib) = MergeSink.readTarget(s, stateDir) match {
         case Some(c) =>
           val dim = c.select(size(col("vsum"))).head().getInt(0)
           val idx = SimSearch.KmIndex(c, k, dim)
@@ -546,7 +546,10 @@ object Streams {
 
   /** Gap-based streaming sessionization over a typed event stream. Emits a
     * session when a new event arrives more than `gapSec` after the previous
-    * one (the final open session flushes on state timeout). */
+    * one (the final open session flushes on state timeout). The
+    * processing-time timeout makes Spark keep scheduling no-data batches,
+    * so under `Trigger.AvailableNow` the query terminates only with
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false`. */
   def sessionize(events: Dataset[SessionEvent], gapSec: Long): Dataset[ClosedSession] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)

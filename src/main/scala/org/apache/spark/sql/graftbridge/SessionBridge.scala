@@ -3,7 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Build a sibling SparkSession with extra SparkSessionExtensions on an
-  * EXISTING SparkContext. `SparkSession.builder.withExtensions(...)
+  * EXISTING SparkContext. The session builder's `withExtensions(...)
   * .getOrCreate()` silently ignores extensions when a session already
   * exists, and the classic constructor that takes them is `private[sql]` —
   * so tests exercising [[graft.GraftExtensions]] against the shared test

@@ -7,12 +7,16 @@ package graft
 class MainSmokeSpec extends SparkTestBase {
 
   test("Main runs one cycle end-to-end against the demo corpus") {
-    spark // force the shared session so Main reuses it via getOrCreate
+    spark // force the shared session so Main reuses it via EngineSession
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val wh = tmpDir("main-smoke")
     Main.run(Map(
       "GRAFT_WAREHOUSE" -> wh,
       "GRAFT_CYCLES" -> "1",
-      "POLL_INTERVAL_SEC" -> "1"))
+      "POLL_INTERVAL_SEC" -> "1",
+      "SPARK_GRAFT_CPUS" -> "1"))
+    // the active session is reused unchanged: no conf leaks into later specs
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
     val dim = spark.read.parquet(s"$wh/dim_scenario")
     assert(dim.count() == 20)
     val wm = new graft.runtime.WatermarkStore(spark, s"$wh/etl_watermark")

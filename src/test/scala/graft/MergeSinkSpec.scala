@@ -335,6 +335,9 @@ class MergeSinkSpec extends SparkTestBase {
       MergeSink.insertIfAbsent(spark, dir, batch, Seq("k")))
     intercept[IllegalStateException](
       MergeSink.compactIfNeeded(spark, dir, maxFiles = 0, targetPartitions = 1))
+    intercept[IllegalStateException](MergeSink.writeReplace(spark, dir, batch))
+    intercept[IllegalStateException](
+      graft.streaming.Streams.Sinks.distinctFold(dir, "k", "status")(spark, batch, 0L))
     assert(TxTable.read(spark, dir).get.select("k", "status", "note")
       .as[(String, String, String)].collect().toSeq.sortBy(_._1) ==
       Seq(("a", "open", "n-a"), ("b", "open", "n-b")))

@@ -155,14 +155,23 @@ class StreamsSpec extends SparkTestBase {
       spark.read.parquet(srcDir).schema, maxFilesPerTrigger = 1)
       .selectExpr("user_id", "ts").as[Streams.SessionEvent]
     val closed = Streams.sessionize(stream, gapSec = 30 * 60)
-    val q = closed.writeStream.outputMode("append")
+    // the processing-time timeout keeps no-data batches coming, so
+    // AvailableNow terminates only with them off (see Streams.sessionize)
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevNoData = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    val q = try closed.writeStream.outputMode("append")
       .format("memory").queryName("sessions")
       .trigger(Trigger.AvailableNow()).start()
+    finally prevNoData match {
+      case Some(v) => spark.conf.set(noData, v)
+      case None => spark.conf.unset(noData)
+    }
     // stop unconditionally: a query that outlives its test keeps
     // StateStore maintenance threads alive for the whole suite (the
     // r14 teardown ERROR + 20 minutes of coordinator lag warnings)
     try {
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "AvailableNow query did not terminate")
       val streamed = spark.sql("SELECT COUNT(*) FROM sessions").collect()(0).getLong(0)
       val batchSessions = SparkEntry.queries("q26_sessionize")(spark, sf()).count()
       val nUsers = events.select("user_id").distinct().count()
