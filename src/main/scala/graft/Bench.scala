@@ -179,8 +179,11 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[profile] warmup $name: $e") }
       val times = (1 to reps).map { i =>
         closed.clear()
+        // names every job of this run in the ledger
+        spark.sparkContext.setJobDescription(s"$name rep$i")
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        try fn(spark, sfDir).count()
+        finally spark.sparkContext.setJobDescription(null)
         val wall = (System.nanoTime() - t0) / 1e9
         if (i == reps) {
           // last rep: print the job ledger, slowest first

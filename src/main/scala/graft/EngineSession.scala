@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   *    leak into every later user of that session.
   *  - A new session always runs in UTC, reads parquet TIMESTAMP(NANOS) as
   *    longs (see `Tables.load`) and logs at `GRAFT_LOG_LEVEL` (default WARN).
+  *    The jar's `log4j2.properties` applies that level from the first log
+  *    line; `setLogLevel` re-applies it over a deployment's own log4j
+  *    configuration once the context is up.
   *  - Without a master (`--master` / `-Dspark.master`, as spark-submit
   *    sets) it runs `local[SPARK_GRAFT_CPUS]` (default min(32, cores)) with
   *    as many shuffle partitions and the UI off.

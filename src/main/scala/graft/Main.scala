@@ -25,7 +25,8 @@ import graft.sources.Jdbc
   *                            the reference's deployment mode (db.py:20-40).
   *                            NOT integration-tested here: no PostgreSQL
   *                            exists in this environment; the binding is the
-  *                            same pushdown reader ApiSurfaceSpec covers.
+  *                            same pushdown reader ApiSurfaceSpec covers;
+  *                            `STATEMENT_TIMEOUT_MS` is its query timeout.
   *  - `GRAFT_CYCLES`          cycle count (default: run forever)
   *  - `GRAFT_COMPACT_EVERY_CYCLES` / `GRAFT_COMPACT_MAX_FILES`
   *                            event-log compaction cadence (default 120 / 256)
@@ -50,7 +51,7 @@ object Main {
     val wh = env.getOrElse("GRAFT_WAREHOUSE", "/tmp/graft_warehouse")
     val boot = new Bootstrap(spark, wh)
     boot.setup()
-    val src = resolveSources(spark, env)
+    val src = resolveSources(spark, env, conf)
     val store = new WatermarkStore(spark, boot.tablePath("etl_watermark"))
     val runner = new IncrementalRunner(spark, store, conf.overlapSec,
       maxConcurrentStreams = 6)
@@ -72,8 +73,8 @@ object Main {
   }
 
   /** Source tables by priority: live JDBC > parquet dir > demo fixtures. */
-  private def resolveSources(spark: SparkSession,
-                             env: Map[String, String]): ScenarioSources = {
+  private def resolveSources(spark: SparkSession, env: Map[String, String],
+                             conf: EngineConf): ScenarioSources = {
     val tables = Seq("fc_scenario", "fc_model", "fc_forecast_init",
       "fc_scenario_node_data", "fc_model_node", "fc_model_node_groups",
       "fc_model_node_tab", "fc_scenario_run", "fc_scenario_run_branch",
@@ -90,10 +91,11 @@ object Main {
     }
     (env.get("GRAFT_SOURCE_JDBC_URL"), env.get("GRAFT_SOURCE_DIR")) match {
       case (Some(url), _) =>
-        val conf = Jdbc.SourceConf(url,
+        val jdbc = Jdbc.SourceConf(url,
           env.getOrElse("GRAFT_SOURCE_USER", "etl_reader"),
-          env.getOrElse("GRAFT_SOURCE_PASSWORD", ""))
-        build(n => Jdbc.pushdownQuery(spark, conf,
+          env.getOrElse("GRAFT_SOURCE_PASSWORD", ""),
+          queryTimeoutSec = conf.queryTimeoutSec)
+        build(n => Jdbc.pushdownQuery(spark, jdbc,
           s"SELECT * FROM public.$n").load())
       case (None, Some(dir)) =>
         build(n => spark.read.parquet(s"$dir/$n"))

@@ -2742,7 +2742,7 @@ object SparkEntry {
       val nationDir = s"$root/lake/nation"
       if (!graft.merge.TxTable.exists(s, nationDir))
         graft.merge.TxTable.append(s, nationDir, T(s, dir, "nation"))
-      val ext = org.apache.spark.sql.graftbridge.SessionBridge
+      val ext = org.apache.spark.sql.graftbridge.GraftBridge
         .withExtensions(s, new GraftExtensions()(_))
       ext.conf.set("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
       ext.conf.set("spark.sql.catalog.graft.root", root)

@@ -471,7 +471,7 @@ object Dedup {
       val schema = plan.schema
       val chIdx = schema.fieldIndex("__changed")
       val acc = sc.longAccumulator(s"nearDupClusters.changed.$iter")
-      val rdd = org.apache.spark.sql.graftbridge.RddBridge
+      val rdd = org.apache.spark.sql.graftbridge.GraftBridge
         .toInternalRdd(plan).map { r =>
           if (!r.isNullAt(chIdx) && r.getBoolean(chIdx)) acc.add(1L)
           r.copy()
@@ -479,7 +479,7 @@ object Dedup {
       rdd.localCheckpoint()
       rdd.count()
       changed = acc.value > 0
-      labels = org.apache.spark.sql.graftbridge.RddBridge
+      labels = org.apache.spark.sql.graftbridge.GraftBridge
         .fromInternalRdd(plan.sparkSession, rdd, schema).drop("__changed")
       iter += 1
     }

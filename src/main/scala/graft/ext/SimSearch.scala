@@ -58,7 +58,7 @@ object SimSearch {
     val par = df.sparkSession.sparkContext.defaultParallelism
     val splitBytes = math.max(1L,
       org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes)
-    val scanBytes = org.apache.spark.sql.graftbridge.PlanBridge.analyzed(df).collect {
+    val scanBytes = org.apache.spark.sql.graftbridge.GraftBridge.analyzed(df).collect {
       case l: LogicalRelation => l.relation match {
         case f: HadoopFsRelation => f.location.sizeInBytes
         case _ => 0L
@@ -353,20 +353,6 @@ object SimSearch {
       targetOccupancy, minRecall)
     (semanticDedupAssignmentsBucketed(corpus, idCol, vecCol, threshold,
       l, r, dim, hotSliceBound, saltFactor), (l, r))
-  }
-
-  /** [[buildSemIndex]] under solver-derived params. Returns the index AND
-    * the (tables, planesPerTable) it was packed with — every later
-    * [[incrementalSemanticAssignments]] against this index MUST pass the
-    * same pair (persist it next to the index). */
-  def buildSemIndexSolved(corpus: DataFrame, idCol: String, vecCol: String,
-                          threshold: Double, dim: Int,
-                          targetOccupancy: Int = 64,
-                          minRecall: Double = 0.95)
-      : (SemIndex, (Int, Int)) = {
-    val (l, r) = semDedupParamsFor(math.max(corpus.count(), 1L), threshold,
-      targetOccupancy, minRecall)
-    (buildSemIndex(corpus, idCol, vecCol, threshold, l, r, dim), (l, r))
   }
 
   // ---------------------------------------------------------------------

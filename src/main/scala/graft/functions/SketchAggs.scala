@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -183,8 +183,8 @@ object SketchAggs {
     * Pass the column UNCAST — keys use the value's string form directly,
     * which skips an interpreted per-row Cast. */
   def topkFreq(col: Column, capacity: Int): Column =
-    ColumnBridge.column(
-      SpaceSavingTopK(ColumnBridge.expression(col), capacity)
+    GraftBridge.column(
+      SpaceSavingTopK(GraftBridge.expression(col), capacity)
         .toAggregateExpression())
 
   // ---------------------------------------------------------------------
@@ -397,8 +397,8 @@ object SketchAggs {
                  lgK: Int = 12): DataFrame =
     df.select(key.as("key"), value.as("__v"))
       .groupBy(col("key"))
-      .agg(ColumnBridge.column(
-        ThetaSketchAgg(ColumnBridge.expression(col("__v")), lgK)
+      .agg(GraftBridge.column(
+        ThetaSketchAgg(GraftBridge.expression(col("__v")), lgK)
           .toAggregateExpression()).as("tsketch"))
 
   /** Pairwise distinct-overlap matrix from a theta state: every key pair
@@ -434,8 +434,8 @@ object SketchAggs {
                     k: Int = 200): DataFrame =
     df.select(key.as("key"), value.cast("double").as("__v"))
       .groupBy(col("key"))
-      .agg(ColumnBridge.column(
-        KllSketchAgg(ColumnBridge.expression(col("__v")), k)
+      .agg(GraftBridge.column(
+        KllSketchAgg(GraftBridge.expression(col("__v")), k)
           .toAggregateExpression()).as("qsketch"))
 
   /** Union per-key quantile states (the fold / compaction step). NOT
@@ -445,8 +445,8 @@ object SketchAggs {
     require(states.nonEmpty, "foldQuantileState needs at least one state")
     states.reduce(_ unionByName _)
       .groupBy(col("key"))
-      .agg(ColumnBridge.column(
-        KllMergeAgg(ColumnBridge.expression(col("qsketch")), k)
+      .agg(GraftBridge.column(
+        KllMergeAgg(GraftBridge.expression(col("qsketch")), k)
           .toAggregateExpression()).as("qsketch"))
   }
 
@@ -454,9 +454,9 @@ object SketchAggs {
     * requested rank. */
   def quantileEstimate(state: DataFrame, probs: Seq[Double]): DataFrame =
     state.select(col("key") +: probs.map { p =>
-      ColumnBridge.column(KllQuantileExpr(
-        ColumnBridge.expression(col("qsketch")),
-        ColumnBridge.expression(org.apache.spark.sql.functions.lit(p))))
+      GraftBridge.column(KllQuantileExpr(
+        GraftBridge.expression(col("qsketch")),
+        GraftBridge.expression(org.apache.spark.sql.functions.lit(p))))
         .as(s"p${(p * 100).round}")
     }: _*)
 
@@ -542,8 +542,8 @@ object SketchAggs {
     * Groupable upstream (`df.groupBy(...).agg(cmAgg(...))`) for per-key
     * states; this is the whole-table form. */
   def cmState(df: DataFrame, item: Column, depth: Int, width: Int): DataFrame =
-    df.agg(ColumnBridge.column(
-      CountMinAgg(ColumnBridge.expression(item), depth, width)
+    df.agg(GraftBridge.column(
+      CountMinAgg(GraftBridge.expression(item), depth, width)
         .toAggregateExpression()).as("cm"))
 
   /** Fold Count-Min states built with the SAME (depth, width): counters
@@ -615,8 +615,8 @@ object SketchAggs {
   /** Column API: `bloomAgg($"uid", 10000, 0.01)` → binary filter bytes.
     * Query driver-side with [[bloomMightContain]]. */
   def bloomAgg(col: Column, expectedItems: Long, fpp: Double): Column =
-    ColumnBridge.column(
-      BloomAgg(ColumnBridge.expression(col), expectedItems, fpp)
+    GraftBridge.column(
+      BloomAgg(GraftBridge.expression(col), expectedItems, fpp)
         .toAggregateExpression())
 
   /** Membership probe against serialized [[BloomAgg]] bytes. */
@@ -753,9 +753,9 @@ object SketchAggs {
     * the `row_number` window form. */
   def topkRows(df: DataFrame, groupCols: Seq[Column], value: Column,
       tie: Column, k: Int): DataFrame = {
-    val agg = ColumnBridge.column(TopKRowsAgg(
-      ColumnBridge.expression(value.cast("double")),
-      ColumnBridge.expression(tie.cast("string")), k)
+    val agg = GraftBridge.column(TopKRowsAgg(
+      GraftBridge.expression(value.cast("double")),
+      GraftBridge.expression(tie.cast("string")), k)
       .toAggregateExpression())
     df.groupBy(groupCols: _*)
       .agg(agg.as("__top"))

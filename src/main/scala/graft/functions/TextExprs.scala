@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,5 +81,5 @@ object TextExprs {
   }
 
   def wordNGrams(col: Column, n: Int, distinct: Boolean = true): Column =
-    ColumnBridge.column(WordNGrams(ColumnBridge.expression(col), n, distinct))
+    GraftBridge.column(WordNGrams(GraftBridge.expression(col), n, distinct))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst expressions for the vector hot paths (SURVEY §2.13,
@@ -252,8 +252,8 @@ object VectorExprs {
       copy(child = newChild)
   }
 
-  private def c(e: Expression): Column = ColumnBridge.column(e)
-  private def x(col: Column): Expression = ColumnBridge.expression(col)
+  private def c(e: Expression): Column = GraftBridge.column(e)
+  private def x(col: Column): Expression = GraftBridge.expression(col)
 
   def dotProduct(a: Column, b: Column): Column = c(DotProduct(x(a), x(b)))
   def longArrayAgree(a: Column, b: Column): Column = c(LongArrayAgree(x(a), x(b)))

@@ -81,36 +81,8 @@ object MergeSink {
     * their first-seen values. */
   def upsertPartial(spark: SparkSession, dir: String, batch: DataFrame,
                     keys: Seq[String], mutableCols: Seq[String],
-                    orderCols: Seq[String] = Nil): Unit = {
-    val b = latestPerKey(batch, keys, orderCols)
-    readTarget(spark, dir) match {
-      case None => writeReplace(spark, dir, b)
-      case Some(existing) =>
-        writeReplace(spark, dir, mergeRows(existing, b, keys, mutableCols))
-    }
-  }
-
-  /** The M1 merge plan: full-outer join existing vs batch on `keys`;
-    * key columns coalesce, `mutableCols` take the batch value whenever the
-    * batch has the key (nulls included, `SET c = EXCLUDED.c`), everything
-    * else keeps its first-seen value. Output columns = existing's. */
-  private def mergeRows(existing: DataFrame, b: DataFrame,
-                        keys: Seq[String], mutableCols: Seq[String]): DataFrame = {
-    val cols = existing.columns.toSeq
-    val e = existing.withColumn("__e", lit(true))
-    val n = b.withColumn("__b", lit(true))
-    val joined = e.alias("e").join(n.alias("n"),
-      keys.map(k => col(s"e.$k") <=> col(s"n.$k")).reduce(_ && _), "full_outer")
-    joined.select(cols.map { c =>
-      val fromE = col(s"e.$c"); val fromN = col(s"n.$c")
-      val out =
-        if (keys.contains(c)) coalesce(fromE, fromN)
-        else if (mutableCols.contains(c))
-          when(col("n.__b").isNotNull, fromN).otherwise(fromE)
-        else when(col("e.__e").isNotNull, fromE).otherwise(fromN)
-      out.as(c)
-    }: _*)
-  }
+                    orderCols: Seq[String] = Nil): Unit =
+    mergeInto(spark, dir, batch, keys, mutableCols, orderCols = orderCols)
 
   // ---------------------------------------------------------------------
   // Partition-scoped merge (the 100 TB path for M1/M2)
@@ -182,7 +154,7 @@ object MergeSink {
     val b = latestPerKey(batch, keys, orderCols).localCheckpoint()
     def migrate(existing: DataFrame): Unit =
       writeReplace(spark, dir,
-        mergeRows(existing.drop(scheme.colName), b, keys, mutableCols)
+        mergePlan(existing.drop(scheme.colName), b, keys, mutableCols).rows
           .withColumn(scheme.colName, scheme.expr), Seq(scheme.colName))
     readTarget(spark, dir) match {
       case None =>
@@ -207,7 +179,7 @@ object MergeSink {
           // rows, or the swap would drop them
           val member = touched.map(v => col(scheme.colName) <=> lit(v)).reduce(_ || _)
           val scoped = existing.filter(member).drop(scheme.colName)
-          val merged = mergeRows(scoped, b, keys, mutableCols)
+          val merged = mergePlan(scoped, b, keys, mutableCols).rows
             .withColumn(scheme.colName, scheme.expr)
           replacePartitions(spark, dir, merged, scheme.colName)
         }
@@ -313,15 +285,16 @@ object MergeSink {
           writeReplace(spark, dir, filterInsertable(src, insertCond))
       case Some(existing) =>
         writeReplace(spark, dir,
-          mergeFullRows(existing, src, keys, updateCols, matchedDeleteCond,
+          mergePlan(existing, src, keys, updateCols, matchedDeleteCond,
             insertNotMatched, insertCond, notMatchedBySourceDeleteCond,
-            updateSources))
+            updateSources).rows)
     }
   }
 
-  /** [[mergeInto]] over the commit log: same plan, atomic `replace` commit
-    * carrying the pre-read head as `expectedHead` (OCC, as
-    * [[upsertPartialTx]]). */
+  /** [[mergeInto]] over the commit log: same plan, atomic `replace` commit.
+    * The head version captured before the read rides along as the commit's
+    * `expectedHead`, so an interleaved writer turns into a loud commit
+    * failure instead of a silently dropped write. */
   def mergeIntoTx(spark: SparkSession, dir: String, source: DataFrame,
                   keys: Seq[String], updateCols: Seq[String],
                   matchedDeleteCond: Option[Column] = None,
@@ -340,9 +313,9 @@ object MergeSink {
             expectedHead = v0, txn = txn)
       case Some(existing) =>
         TxTable.replace(spark, dir,
-          mergeFullRows(existing, src, keys, updateCols, matchedDeleteCond,
+          mergePlan(existing, src, keys, updateCols, matchedDeleteCond,
             insertNotMatched, insertCond, notMatchedBySourceDeleteCond,
-            updateSources),
+            updateSources).rows,
           expectedHead = v0, txn = txn)
     }
   }
@@ -361,10 +334,12 @@ object MergeSink {
     * maintenance are [[TxTable.deleteWhereDV]]'s: anti-join on the
     * touched files until `purgeDvs`.
     *
-    * Clause semantics are [[mergeFullRows]]'s, row for row (delete tested
-    * before update; SQL three-valued conditions; `updateSources` side
-    * channel for diverging UPDATE/INSERT values) — MergeSinkSpec asserts
-    * equivalence against the replace-based plan on the same inputs. */
+    * The change set is read off [[mergePlan]]'s join: a target row the
+    * clauses drop retires ('del'), a kept match with update columns
+    * retires and re-appends ('upd'), a kept source-only row appends
+    * ('ins'); appended images take the plan's column values, so clause
+    * semantics are the replace-based merge's row for row — MergeSinkSpec
+    * and DeleteVectorSpec assert the equivalence on the same inputs. */
   def mergeIntoDV(spark: SparkSession, dir: String, source: DataFrame,
                   keys: Seq[String], updateCols: Seq[String],
                   matchedDeleteCond: Option[Column] = None,
@@ -376,51 +351,28 @@ object MergeSink {
                   updateSources: Map[String, String] = Map.empty): Unit = {
     val src = latestPerKey(source, keys, orderCols)
     val head = TxTable.headVersion(spark, dir)
-    val tagged = TxTable.readTagged(spark, dir, "__graft_file", "__graft_pos")
-    tagged match {
+    TxTable.readTagged(spark, dir, FileTag, PosTag) match {
       case None =>
         // no target rows: every source row is not-matched (first batch)
         if (insertNotMatched)
           TxTable.replace(spark, dir, filterInsertable(src, insertCond),
             expectedHead = head, txn = txn)
       case Some(existing) =>
-        val cols = existing.columns.toSeq
-          .filterNot(c => c == "__graft_file" || c == "__graft_pos")
-        val t = existing.withColumn("__t", lit(true)).alias("t")
-        val s = src.withColumn("__s", lit(true)).alias("s")
-        val joined = t.join(s,
-          keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _),
-          "full_outer")
-        val matched = col("t.__t").isNotNull && col("s.__s").isNotNull
-        val targetOnly = col("t.__t").isNotNull && col("s.__s").isNull
-        def fires(c: Option[Column]) =
-          coalesce(c.getOrElse(lit(false)), lit(false))
-        val insertOk =
-          lit(insertNotMatched) && fires(Some(insertCond.getOrElse(lit(true))))
-        val hasUpdate = updateCols.nonEmpty
-        // one pass over the join classifies every CHANGED row ('del' =
-        // position retires, 'upd' = position retires + copy appends,
-        // 'ins' = copy appends); unchanged rows never leave the join
+        val plan = mergePlan(existing, src, keys, updateCols, matchedDeleteCond,
+          insertNotMatched, insertCond, notMatchedBySourceDeleteCond,
+          updateSources)
+        // classify every CHANGED row of the join; unchanged rows never
+        // leave it
         val action =
-          when(matched && fires(matchedDeleteCond), "del")
-            .when(matched && lit(hasUpdate), "upd")
-            .when(targetOnly && fires(notMatchedBySourceDeleteCond), "del")
-            .when(col("t.__t").isNull && insertOk, "ins")
-        val outCols = cols.map { c =>
-          when(col("__graft_action") === "ins", col(s"s.$c"))
-            .otherwise(
-              if (keys.contains(c)) col(s"t.$c")
-              else if (updateCols.contains(c))
-                col(s"s.${updateSources.getOrElse(c, c)}")
-              else col(s"t.$c"))
-            .as(c)
-        }
-        val changed = joined
+          when(plan.inTarget && !plan.keep, "del")
+            .when(plan.matched && lit(updateCols.nonEmpty), "upd")
+            .when(!plan.inTarget && plan.keep, "ins")
+        val changed = plan.joined
           .withColumn("__graft_action", action)
           .filter(col("__graft_action").isNotNull)
           .select(col("__graft_action") +:
-            col("t.__graft_file").as("__graft_file") +:
-            col("t.__graft_pos").as("__graft_pos") +: outCols: _*)
+            col(s"t.$FileTag").as(FileTag) +:
+            col(s"t.$PosTag").as(PosTag) +: plan.values: _*)
         // park the O(changed) set so the target scans once; crash debris
         // is an orphan dir vacuum reclaims by age
         val fs = new Path(dir)
@@ -438,10 +390,9 @@ object MergeSink {
           val ch = spark.read.parquet(tmp.toString)
           TxTable.applyRowChanges(spark, dir,
             ch.filter(col("__graft_action") =!= "ins")
-              .select(col("__graft_file").as("file"),
-                col("__graft_pos").as("pos")),
+              .select(col(FileTag).as("file"), col(PosTag).as("pos")),
             appends = Some(ch.filter(col("__graft_action") =!= "del")
-              .select(cols.map(col): _*)),
+              .select(plan.cols.map(col): _*)),
             expectedHead = head, txn = txn)
         }
         fs.delete(tmp, true)
@@ -457,9 +408,30 @@ object MergeSink {
       case Some(c) => src.alias("s").filter(coalesce(c, lit(false)))
     }
 
-  /** The tri-clause MERGE plan ([[mergeInto]]): full-outer join on `keys`,
-    * per-row clause dispatch on which side(s) matched. Output columns =
-    * the target's.
+  /** Row-position tags [[mergeIntoDV]] reads the target with; they ride
+    * through [[mergePlan]]'s join but are not table columns. */
+  private val FileTag = "__graft_file"
+  private val PosTag = "__graft_pos"
+
+  /** A planned MERGE: `joined` is the full-outer join of the target
+    * (aliased `t`) and the source (aliased `s`); `inTarget` and `matched`
+    * say which sides a joined row has; `keep` whether the clauses keep it;
+    * `values` are the output columns `cols` (the target's). */
+  private final case class MergePlan(joined: DataFrame, cols: Seq[String],
+                                     inTarget: Column, matched: Column,
+                                     keep: Column, values: Seq[Column]) {
+    /** The merged table: every kept row, in the target's columns. */
+    def rows: DataFrame = joined.filter(keep).select(values: _*)
+  }
+
+  /** The one MERGE plan behind every merge mode ([[mergeInto]] and its
+    * log and deletion-vector forms; M1/M2 are its default clauses): one
+    * full-outer join on `keys`, per-row clause dispatch on which side(s)
+    * matched. Key columns coalesce; `updateCols` take the source value
+    * whenever the source has the key (nulls included, `SET c =
+    * EXCLUDED.c`); every other column keeps the target value, else the
+    * source's. With default clauses `keep` folds to true, so the optimized
+    * plan is the join and one projection.
     *
     * `updateSources` lets the UPDATE and INSERT clauses disagree on a
     * column: the source row carries the INSERT value under the column's
@@ -467,42 +439,42 @@ object MergeSink {
     * SIDE-CHANNEL column named `updateSources(col)` (used for matched
     * rows) — standard MERGE lets the two clauses set different values,
     * and a single in-row value cannot express that. Columns absent from
-    * the map read their one in-row value on both paths, as before. */
-  private def mergeFullRows(existing: DataFrame, src: DataFrame,
-                            keys: Seq[String], updateCols: Seq[String],
-                            matchedDeleteCond: Option[Column],
-                            insertNotMatched: Boolean,
-                            insertCond: Option[Column],
-                            notMatchedBySourceDeleteCond: Option[Column],
-                            updateSources: Map[String, String] = Map.empty)
-      : DataFrame = {
-    val cols = existing.columns.toSeq
+    * the map read their one in-row value on both paths. */
+  private def mergePlan(existing: DataFrame, src: DataFrame,
+                        keys: Seq[String], updateCols: Seq[String],
+                        matchedDeleteCond: Option[Column] = None,
+                        insertNotMatched: Boolean = true,
+                        insertCond: Option[Column] = None,
+                        notMatchedBySourceDeleteCond: Option[Column] = None,
+                        updateSources: Map[String, String] = Map.empty)
+      : MergePlan = {
+    val cols = existing.columns.toSeq.filterNot(c => c == FileTag || c == PosTag)
     val t = existing.withColumn("__t", lit(true)).alias("t")
     val s = src.withColumn("__s", lit(true)).alias("s")
     val joined = t.join(s,
       keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _),
       "full_outer")
-    val matched = col("t.__t").isNotNull && col("s.__s").isNotNull
-    val targetOnly = col("t.__t").isNotNull && col("s.__s").isNull
-    // null condition results (SQL three-valued logic) mean "don't delete"
+    val inTarget = col("t.__t").isNotNull
+    val inSource = col("s.__s").isNotNull
+    val matched = inTarget && inSource
+    // null condition results (SQL three-valued logic) mean "don't fire"
     def fires(c: Option[Column]) =
       coalesce(c.getOrElse(lit(false)), lit(false))
     val insertOk =
       lit(insertNotMatched) && fires(Some(insertCond.getOrElse(lit(true))))
-    val keep =
-      when(matched, !fires(matchedDeleteCond))
-        .when(targetOnly, !fires(notMatchedBySourceDeleteCond))
-        .otherwise(insertOk) // source-only: guarded insert clause
-    joined.filter(keep).select(cols.map { c =>
+    val keep = !(matched && fires(matchedDeleteCond)) &&
+      !(inTarget && !inSource && fires(notMatchedBySourceDeleteCond)) &&
+      (inTarget || insertOk) // source-only: the guarded insert clause
+    val values = cols.map { c =>
       val out =
         if (keys.contains(c)) coalesce(col(s"t.$c"), col(s"s.$c"))
-        else if (updateCols.contains(c))
-          when(targetOnly, col(s"t.$c"))
-            .when(matched, col(s"s.${updateSources.getOrElse(c, c)}"))
-            .otherwise(col(s"s.$c")) // source-only: the INSERT value
-        else when(col("t.__t").isNotNull, col(s"t.$c")).otherwise(col(s"s.$c"))
+        else if (updateCols.contains(c)) {
+          val v = when(inSource, col(s"s.$c")).otherwise(col(s"t.$c"))
+          updateSources.get(c).fold(v)(u => when(matched, col(s"s.$u")).otherwise(v))
+        } else when(inTarget, col(s"t.$c")).otherwise(col(s"s.$c"))
       out.as(c)
-    }: _*)
+    }
+    MergePlan(joined, cols, inTarget, matched, keep, values)
   }
 
   /** Materialize `df` into `dir` via tmp-dir + swap, so a reader never sees
@@ -614,38 +586,15 @@ object MergeSink {
   }
 
   // ---------------------------------------------------------------------
-  // M1-M4 over the TxTable commit log
+  // M1 over the TxTable commit log
   //
-  // Same merge plans, different commit protocol: instead of the rename
-  // swap (multi-step, needs recover()), each batch publishes via ONE log
-  // rename — no crash window a reader can observe, no recovery pass. No
-  // pipeline or streaming sink binds these (TxTableSpec drives them); the
+  // The same merge plan, a different commit protocol: instead of the
+  // rename swap (multi-step, needs recover()), each batch publishes via ONE
+  // log rename — no crash window a reader can observe, no recovery pass.
+  // No pipeline or streaming sink binds this (TxTableSpec drives it); the
   // sinks move to the log once deletion vectors and upkeep bound its
   // storage (ROADMAP.md).
   // ---------------------------------------------------------------------
-
-  /** M1 over the commit log: full merge + atomic `replace` commit. The head
-    * version captured before the read rides along as the commit's
-    * `expectedHead`, so an interleaved writer turns into a loud commit
-    * failure instead of a silently dropped write. */
-  def upsertPartialTx(spark: SparkSession, dir: String, batch: DataFrame,
-                      keys: Seq[String], mutableCols: Seq[String],
-                      orderCols: Seq[String] = Nil): Unit = {
-    val b = latestPerKey(batch, keys, orderCols)
-    val v0 = TxTable.headVersion(spark, dir)
-    TxTable.read(spark, dir) match {
-      case None           => TxTable.replace(spark, dir, b, expectedHead = v0)
-      case Some(existing) =>
-        TxTable.replace(spark, dir, mergeRows(existing, b, keys, mutableCols),
-          expectedHead = v0)
-    }
-  }
-
-  /** M2 over the commit log (see [[scd2]] for semantics). */
-  def scd2Tx(spark: SparkSession, dir: String, batch: DataFrame,
-             key: String, mutableCols: Seq[String],
-             orderCols: Seq[String] = Nil): Unit =
-    upsertPartialTx(spark, dir, batch, Seq(key), mutableCols, orderCols)
 
   /** M1 scoped + transactional — the 100 TB path with an O(1) commit:
     * read ONLY the partitions holding batch keys (pruned at the log level,
@@ -671,7 +620,7 @@ object MergeSink {
       val merged = TxTable.read(spark, dir) match {
         case None           => b
         case Some(existing) =>
-          mergeRows(existing.drop(scheme.colName), b, keys, mutableCols)
+          mergePlan(existing.drop(scheme.colName), b, keys, mutableCols).rows
       }
       TxTable.replace(spark, dir, staged(merged),
         Seq(scheme.colName), Some(scheme.descriptor), expectedHead = v0)
@@ -683,33 +632,13 @@ object MergeSink {
         val merged = TxTable.read(spark, dir, Some(touched)) match {
           case None         => b // no live rows in the touched partitions
           case Some(scoped) =>
-            mergeRows(scoped.drop(scheme.colName), b, keys, mutableCols)
+            mergePlan(scoped.drop(scheme.colName), b, keys, mutableCols).rows
         }
         TxTable.replacePartitions(spark, dir, staged(merged), scheme.colName,
           Some(scheme.descriptor), expectedHead = v0)
       }
     }
   }
-
-  /** M3 over the commit log: anti-join then a pure `append` commit. */
-  def insertIfAbsentTx(spark: SparkSession, dir: String, batch: DataFrame,
-                       keys: Seq[String], partitionCols: Seq[String] = Nil): Unit = {
-    val b = batch.dropDuplicates(keys)
-    TxTable.read(spark, dir) match {
-      case None => TxTable.append(spark, dir, b, partitionCols)
-      case Some(existing) =>
-        val fresh = b.join(
-            existing.select(keys.map(col): _*).dropDuplicates(keys),
-            keys, "left_anti")
-          .select(existing.columns.map(col).toSeq: _*) // stable column order
-        if (!fresh.isEmpty) TxTable.append(spark, dir, fresh, partitionCols)
-    }
-  }
-
-  /** M4 over the commit log: [[insertIfAbsentTx]] on a synthesized key. */
-  def appendDedupTx(spark: SparkSession, dir: String, batch: DataFrame,
-                    key: String, partitionCols: Seq[String] = Nil): Unit =
-    insertIfAbsentTx(spark, dir, batch, Seq(key), partitionCols)
 
   /** Small-file compaction: append-mode sinks (M3/M4) accrete one file set
     * per micro-batch — at a 30 s cadence that is ~2.9k file sets/day, which

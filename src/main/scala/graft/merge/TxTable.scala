@@ -1799,10 +1799,6 @@ object TxTable {
     }
   }
 
-  /** Backwards-compat shim for the date-only callers. */
-  private[graft] def dateDerivedSource(exprSql: String): Option[String] =
-    derivedPartSource(exprSql).collect { case (c, "date") => c }
-
   /** Property keys for column DEFAULT values (the reference's pervasive
     * DDL idiom — `setup_target.py:17-20,78-79,102,130,152,172-180,204,
     * 237`: `DEFAULT 0`, `DEFAULT TRUE`, `DEFAULT NOW()`, ...):
@@ -2399,7 +2395,7 @@ object TxTable {
           (rel, frag, rows, stats)
         }
       else {
-        val serConf = org.apache.spark.sql.graftbridge.ConfBridge
+        val serConf = org.apache.spark.sql.graftbridge.GraftBridge
           .serializable(spark.sparkContext.hadoopConfiguration)
         val slices = math.max(1, math.min(10000, cand.size / 64))
         spark.sparkContext.parallelize(cand, slices)

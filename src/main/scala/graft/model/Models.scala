@@ -20,14 +20,6 @@ object Models {
       withdraw_at: Option[Timestamp],
       etl_created_at: Option[Timestamp], etl_updated_at: Option[Timestamp])
 
-  final case class RunSummary(
-      run_id: String, scenario_id: Option[String], run_status: Option[String],
-      run_at: Option[Timestamp], run_complete_at: Option[Timestamp],
-      run_duration_minutes: Option[BigDecimal], fail_reason: Option[String],
-      n_branches: Option[Long], n_calcs: Option[Long], n_success: Option[Long],
-      n_failed: Option[Long], n_timeout: Option[Long],
-      etl_created_at: Option[Timestamp], etl_updated_at: Option[Timestamp])
-
   final case class TimelineEvent(
       source_key: String, event_type: Option[String],
       event_category: Option[String], event_time: Option[Timestamp],
@@ -43,10 +35,6 @@ object Models {
   def dimScenario(df: DataFrame): Dataset[DimScenario] = {
     import df.sparkSession.implicits._
     df.as[DimScenario]
-  }
-  def runSummary(df: DataFrame): Dataset[RunSummary] = {
-    import df.sparkSession.implicits._
-    df.as[RunSummary]
   }
   def timeline(df: DataFrame): Dataset[TimelineEvent] = {
     import df.sparkSession.implicits._

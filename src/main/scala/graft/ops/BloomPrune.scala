@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ScalarSubquery, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Explicit semi-join reduction with a bloom filter — the pattern behind
   * Spark's `InjectRuntimeFilter`, surfaced as an operator so pipelines can
@@ -24,12 +24,12 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 object BloomPrune {
 
   private def xxh(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    new XxHash64(Seq(ColumnBridge.expression(c)))
+    new XxHash64(Seq(GraftBridge.expression(c)))
 
   /** One-row DataFrame holding a bloom filter (binary) over `key`. */
   def buildFilter(build: DataFrame, key: String,
       expectedItems: Long): DataFrame =
-    build.select(ColumnBridge.column(
+    build.select(GraftBridge.column(
       new BloomFilterAggregate(xxh(col(key)), expectedItems)
         .toAggregateExpression()).as("__bloom"))
 
@@ -42,7 +42,7 @@ object BloomPrune {
       buildKey: String, expectedItems: Long = 1000000L): DataFrame = {
     val bloomPlan = buildFilter(build, buildKey, expectedItems)
       .queryExecution.analyzed
-    probe.filter(ColumnBridge.column(BloomFilterMightContain(
+    probe.filter(GraftBridge.column(BloomFilterMightContain(
       ScalarSubquery(bloomPlan), xxh(col(probeKey)))))
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
 
 /** Whole-operator custom plan (SURVEY §2's option-c extension point): a
@@ -154,8 +154,8 @@ object AsOfExec {
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    val lPlan = PlanBridge.analyzed(left)
-    val rPlan = PlanBridge.analyzed(right)
+    val lPlan = GraftBridge.analyzed(left)
+    val rPlan = GraftBridge.analyzed(right)
     def attr(p: LogicalPlan, name: String): Attribute =
       p.output.find(_.name == name).getOrElse(
         sys.error(s"column $name not in ${p.output.map(_.name)}"))
@@ -165,7 +165,7 @@ object AsOfExec {
     def isTs(dt: DataType) = dt == TimestampType || dt == TimestampNTZType
     require(isTs(lts.dataType) && isTs(rts.dataType),
       s"as-of ts columns must be timestamps: ${lts.dataType}, ${rts.dataType}")
-    PlanBridge.ofRows(spark, AsOfJoinPlan(lPlan, rPlan,
+    GraftBridge.ofRows(spark, AsOfJoinPlan(lPlan, rPlan,
       attr(lPlan, leftKey), attr(rPlan, rightKey), lts, rts))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{InsertIntoDataSourceCommand, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.merge.{MergeSink, TxTable}
 
@@ -183,7 +183,7 @@ final case class GraftSqlRules(session: SparkSession) extends Rule[LogicalPlan] 
       require(!opts.get("mode").contains("cdc"),
         "cdc-mode streams carry extra columns the catalog table does not " +
           "declare — use spark.readStream.format(\"graft\") with the path")
-      val v1 = org.apache.spark.sql.graftbridge.StreamingBridge
+      val v1 = org.apache.spark.sql.graftbridge.GraftBridge
         .v1StreamingRelation(session, "graft", opts + ("path" -> t.dir))
       val caseSensitive =
         session.conf.get("spark.sql.caseSensitive", "false").toBoolean
@@ -350,7 +350,7 @@ final case class GraftSqlRules(session: SparkSession) extends Rule[LogicalPlan] 
     * pipeline joins — keep measured join estimates instead of falling back
     * to size defaults until purge_dvs runs. */
   private def swappedRead(dir: String, asOf: Option[Long]): LogicalPlan = {
-    val lr0 = PlanBridge.analyzed(GraftSql.dataFrame(session, dir, asOf))
+    val lr0 = GraftBridge.analyzed(GraftSql.dataFrame(session, dir, asOf))
     if (!TxTable.hasLiveDvs(session, dir, asOf))
       TxTable.catalogStats(session, dir, asOf) match {
         case Some(cs) => attachCleanStats(lr0, dir, cs)
@@ -761,7 +761,7 @@ final case class GraftSqlRules(session: SparkSession) extends Rule[LogicalPlan] 
     // clause disagrees — a different expression, or the INSERT column list
     // omits a column the UPDATE sets (standard MERGE inserts NULL there) —
     // the update value rides a `__graft_upd_<col>` side-channel column
-    // instead (MergeSink.mergeFullRows' updateSources contract), so each
+    // instead (MergeSink.mergePlan's updateSources contract), so each
     // clause applies exactly its own value.
     val divergent =
       scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
@@ -834,7 +834,7 @@ final case class GraftDynamicOverwriteCommand(dir: String,
     extends LeafRunnableCommand {
   override def output: Seq[Attribute] = Nil
   override def run(sparkSession: SparkSession): Seq[Row] = {
-    val df = PlanBridge.ofRows(sparkSession, queryPlan).toDF(colNames: _*)
+    val df = GraftBridge.ofRows(sparkSession, queryPlan).toDF(colNames: _*)
     TxTable.replacePartitionsBy(sparkSession, dir, df, partCols)
     Nil
   }
@@ -938,7 +938,7 @@ final case class GraftMergeCommand(dir: String, sourcePlan: LogicalPlan,
     extends LeafRunnableCommand {
   override def output: Seq[Attribute] = Nil
   override def run(sparkSession: SparkSession): Seq[Row] = {
-    val src0 = PlanBridge.ofRows(sparkSession, sourcePlan)
+    val src0 = GraftBridge.ofRows(sparkSession, sourcePlan)
       .selectExpr(projections: _*)
     // identity columns: fresh ids assigned to every source row (unused
     // ones — matched rows that update — become gaps; uniqueness, not

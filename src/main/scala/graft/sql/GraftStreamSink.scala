@@ -56,7 +56,7 @@ final class GraftStreamSink(spark: SparkSession, dir: String,
     // it as a batch plan so TxTable's writer path accepts it
     val batch =
       if (data.isStreaming)
-        org.apache.spark.sql.graftbridge.StreamingBridge.asBatch(data)
+        org.apache.spark.sql.graftbridge.GraftBridge.asBatch(data)
       else data
     if (TxTable.lastTxn(spark, dir, app).exists(_ >= batchId)) {
       // redelivered epoch — the commit that carried it already landed

@@ -5,7 +5,7 @@ import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLi
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.StreamingBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.StructType
 
 import graft.merge.TxTable
@@ -156,7 +156,7 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
     val after = start.map(o => ver(o.json)).getOrElse(startingVersion)
     val until = ver(end.json)
     val batch = TxTable.readChanges(spark, dir, after, Some(until)) match {
-      case None => return StreamingBridge.emptyStreaming(spark, schema)
+      case None => return GraftBridge.emptyStreaming(spark, schema)
       case Some(ch) if cdc => ch
       case Some(ch0) =>
         // versions that removed files, driver-side from the log (the
@@ -230,7 +230,7 @@ final class GraftStreamSource(spark: SparkSession, dir: String,
             "checkpoint stays valid")
       }
     }
-    StreamingBridge.asStreaming(
+    GraftBridge.asStreaming(
       batch.select(out.zip(schema.fieldNames).map { case (c, n) =>
         c.as(n) }.toSeq: _*))
   }

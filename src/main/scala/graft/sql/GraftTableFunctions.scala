@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.merge.TxTable
@@ -81,7 +81,7 @@ object GraftTableFunctions {
               s"a timestamp string literal, got $other")
         }
       }
-      PlanBridge.analyzed(GraftSql.dataFrame(spark, dir, asOf))
+      GraftBridge.analyzed(GraftSql.dataFrame(spark, dir, asOf))
     },
     "graft_changes" -> { args =>
       require(args.size == 2 || args.size == 3,
@@ -92,11 +92,11 @@ object GraftTableFunctions {
       val df = TxTable.readChanges(spark, dir, after, until).getOrElse(
         spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           GraftStreamSource.schemaFor(spark, dir, cdc = true)))
-      PlanBridge.analyzed(df)
+      GraftBridge.analyzed(df)
     },
     "graft_history" -> { args =>
       require(args.size == 1, "graft_history(dir)")
-      PlanBridge.analyzed(
+      GraftBridge.analyzed(
         TxTable.history(spark, strArg(args.head, "graft_history", "dir")))
     },
     "graft_files" -> { args =>
@@ -116,7 +116,7 @@ object GraftTableFunctions {
           e.dv.map(_.dir).orNull, e.dv.map(_.deleted).getOrElse(0L))
       }
       val sq = spark.sqlContext; import sq.implicits._
-      PlanBridge.analyzed(
+      GraftBridge.analyzed(
         rows.toDF("path", "partition", "bytes", "stat_min", "stat_max",
           "dv_path", "n_deleted"))
     },
@@ -174,7 +174,7 @@ object GraftTableFunctions {
         TxTable.listTags(spark, dir)
           .map { case (t, v) => s"$t@$v" }.mkString(","))
       val sq = spark.sqlContext; import sq.implicits._
-      PlanBridge.analyzed(Seq(row).toDF("location", "num_files",
+      GraftBridge.analyzed(Seq(row).toDF("location", "num_files",
         "size_bytes", "live_rows", "partition_columns", "last_version",
         "num_dv_files", "dv_read_tax", "zorder_columns",
         "unclustered_files", "commits_since_analyze", "bucket",

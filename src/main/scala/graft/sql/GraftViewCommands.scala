@@ -48,7 +48,7 @@ final case class GraftCreateViewCommand(cat: String, rel: String,
     val catalog = catalogOf(session, cat)
     val ident = identOf(rel)
     if (ifNotExists && catalog.viewExists(ident)) return Nil
-    val analyzed = org.apache.spark.sql.graftbridge.PlanBridge
+    val analyzed = org.apache.spark.sql.graftbridge.GraftBridge
       .ofRows(session, session.sessionState.sqlParser.parsePlan(sql))
     val cm = session.sessionState.catalogManager
     val schema = analyzed.schema

@@ -7,13 +7,11 @@ class ConfigSpec extends SparkTestBase {
     val c = EngineConf.fromEnv(Map.empty)
     assert(c.pollIntervalSec == 30L)
     assert(c.overlapSec == 90L)
-    assert(c.maxBatchRows == 5000)
     assert(c.queryTimeoutSec == 15)
     assert(c.maxConsecutiveFailures == 10)
-    assert(c.sinkPageSize == 500)
   }
   test("EngineConf env overrides") {
-    val c = EngineConf.fromEnv(Map("OVERLAP_SEC" -> "120", "MAX_BATCH_ROWS" -> "99"))
-    assert(c.overlapSec == 120L && c.maxBatchRows == 99)
+    val c = EngineConf.fromEnv(Map("OVERLAP_SEC" -> "120", "STATEMENT_TIMEOUT_MS" -> "30000"))
+    assert(c.overlapSec == 120L && c.queryTimeoutSec == 30)
   }
 }

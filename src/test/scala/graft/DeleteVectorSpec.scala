@@ -47,7 +47,7 @@ class DeleteVectorSpec extends SparkTestBase {
     assert(spark.read.format("graft").load(dir).count() == 90)
     assert(graft.sql.GraftDataSource.dvFallbackWarnings.get() == c0 + 2)
     // an extensions-enabled session swaps the plan — no warning
-    val ext = org.apache.spark.sql.graftbridge.SessionBridge
+    val ext = org.apache.spark.sql.graftbridge.GraftBridge
       .withExtensions(spark, new GraftExtensions()(_))
     // force rule instantiation (registration happens when the analyzer
     // first builds the session's rules)

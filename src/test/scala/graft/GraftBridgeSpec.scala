@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge, SessionBridge, StreamingBridge}
+import org.apache.spark.sql.graftbridge.{GraftBridge => ColumnBridge}
+import org.apache.spark.sql.graftbridge.{GraftBridge => PlanBridge}
+import org.apache.spark.sql.graftbridge.{GraftBridge => SessionBridge}
+import org.apache.spark.sql.graftbridge.{GraftBridge => StreamingBridge}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Smoke guard for `org.apache.spark.sql.graftbridge` — the four thin

@@ -274,7 +274,7 @@ class GraftStreamSourceSpec extends SparkTestBase {
   }
 
   test("readStream.table through the graft catalog rides the same V1 source") {
-    val sq = org.apache.spark.sql.graftbridge.SessionBridge
+    val sq = org.apache.spark.sql.graftbridge.GraftBridge
       .withExtensions(spark, new GraftExtensions()(_))
     val root = tmpDir("ss-cat-root")
     sq.conf.set("spark.sql.catalog.graft", "graft.sql.GraftCatalog")

@@ -326,7 +326,7 @@ class MergeSinkSpec extends SparkTestBase {
     val dir = tmpDir("tx-guard")
     val rows = Seq(("a", "open", "n-a"), ("b", "open", "n-b"))
       .toDF("k", "status", "note")
-    MergeSink.upsertPartialTx(spark, dir, rows, Seq("k"), Seq("status"))
+    MergeSink.mergeIntoTx(spark, dir, rows, Seq("k"), Seq("status"))
     val batch = Seq(("b", "closed", "n-b"), ("c", "open", "n-c"))
       .toDF("k", "status", "note")
     intercept[IllegalStateException](MergeSink.upsertPartialScoped(spark, dir,

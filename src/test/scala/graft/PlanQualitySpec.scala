@@ -570,7 +570,7 @@ class PlanQualitySpec extends SparkTestBase {
     // and the end-to-end scan agrees: the same predicate through a real
     // FileSourceScanExec lists exactly the surviving file's partitions
     val rel = graft.sql.GraftSql.relation(spark, dir, None)
-    val df = org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark,
+    val df = org.apache.spark.sql.graftbridge.GraftBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
       .filter($"uid" === "80000003-0000-4000-8000-000000000003")
     assert(df.count() == 1)
@@ -583,5 +583,43 @@ class PlanQualitySpec extends SparkTestBase {
     // the declared-then-written column reads from parquet where present —
     // no per-row UDF or generator materializes it in the final scan
     assert(!p.contains("Generate"), p)
+  }
+
+  test("M1 scoped upsert plans one full-outer join, no Filter above it") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = tmpDir("m1-plan")
+    val scheme = graft.merge.MergeSink.PartitionScheme.keyHash(Seq("k"), 4)
+    graft.merge.MergeSink.upsertPartialScoped(spark, dir,
+      (1 to 20).map(i => (s"k$i", "open", s"n$i")).toDF("k", "status", "note"),
+      Seq("k"), Seq("status"), scheme)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      graft.merge.MergeSink.upsertPartialScoped(spark, dir,
+        Seq(("k3", "closed", "X"), ("k99", "open", "n99")).toDF("k", "status", "note"),
+        Seq("k"), Seq("status"), scheme)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val merges = plans.asScala.toSeq.filter(_.exists(_.isInstanceOf[Join]))
+    assert(merges.size == 1, merges.mkString("\n"))
+    val p = merges.head
+    assert(p.collect { case j: Join => j.joinType } == Seq(FullOuter), p)
+    def above(n: LogicalPlan): Seq[LogicalPlan] =
+      if (n.isInstanceOf[Join]) Nil else n +: n.children.flatMap(above)
+    val top = above(p)
+    assert(!top.exists(_.isInstanceOf[Filter]), p)
+    // one projection computes the merged columns, one the bucket column
+    assert(top.count(_.isInstanceOf[Project]) == 2, p)
   }
 }

@@ -2,13 +2,13 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** The GraftExtensions optimizer rule: naive range joins become binned
   * equi-joins (same rows, no nested loop); guarded patterns stay put. */
 class RangeJoinRewriteSpec extends SparkTestBase {
 
-  private lazy val ext = SessionBridge.withExtensions(spark,
+  private lazy val ext = GraftBridge.withExtensions(spark,
     new GraftExtensions()(_))
 
   private def t(s: String) = Timestamp.valueOf(s)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.merge.TxTable
 
@@ -22,7 +22,7 @@ class SqlFrontDoorSpec extends SparkTestBase {
     * the exact production wire-up (spark.sql.extensions +
     * spark.sql.catalog.graft). */
   private lazy val ext: SparkSession = {
-    val s = SessionBridge.withExtensions(spark, new GraftExtensions()(_))
+    val s = GraftBridge.withExtensions(spark, new GraftExtensions()(_))
     s.conf.set("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.root", lakeRoot)
     s
@@ -2156,7 +2156,7 @@ class SqlFrontDoorSpec extends SparkTestBase {
     assert(ext.sql("SHOW VIEWS IN graft.db").collect()
       .map(_.getString(1)).contains("v_even"))
     // persistent: a FRESH session + catalog instance resolves it from disk
-    val ext2 = SessionBridge.withExtensions(spark, new GraftExtensions()(_))
+    val ext2 = GraftBridge.withExtensions(spark, new GraftExtensions()(_))
     ext2.conf.set("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
     ext2.conf.set("spark.sql.catalog.graft.root", lakeRoot)
     assert(ext2.sql("SELECT count(*) FROM graft.db.v_even").head.getLong(0) == 6)

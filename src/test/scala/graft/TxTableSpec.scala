@@ -17,14 +17,14 @@ class TxTableSpec extends SparkTestBase {
       .as[(String, String, String)].collect()
       .map(t => t._1 -> ((t._2, t._3))).toMap
 
-  test("M1 upsertPartialTx matches rename-mode upsertPartial exactly") {
+  test("M1 as mergeIntoTx matches rename-mode upsertPartial exactly") {
     val txDir = tmpDir("tx-m1"); val fsDir = tmpDir("fs-m1")
     val b1 = Seq(("a", "open", "created-a"), ("b", "open", "created-b"))
       .toDF("k", "status", "note")
     val b2 = Seq(("a", "closed", "SHOULD-NOT-REPLACE"), ("c", "open", "created-c"))
       .toDF("k", "status", "note")
     for (b <- Seq(b1, b2, b2)) { // includes an overlap replay
-      MergeSink.upsertPartialTx(spark, txDir, b, Seq("k"), Seq("status"))
+      MergeSink.mergeIntoTx(spark, txDir, b, Seq("k"), Seq("status"))
       MergeSink.upsertPartial(spark, fsDir, b, Seq("k"), Seq("status"))
     }
     val fromFs = spark.read.parquet(fsDir).select("k", "status", "note")
@@ -33,39 +33,26 @@ class TxTableSpec extends SparkTestBase {
     assert(snapshot(txDir)("a") == ("closed", "created-a"))
   }
 
-  test("M2 scd2Tx: close-out flips is_current, invariant holds, replay converges") {
+  test("M2 as mergeIntoTx: close-out flips is_current, replay converges") {
     val dir = tmpDir("tx-m2")
     def row(id: String, ended: Option[String], cur: Boolean) =
       (id, "e1", ended.orNull, cur)
     val cols = Seq("source_id", "entity", "version_ended_at", "is_current_version")
     val b1 = Seq(row("v1", None, cur = true)).toDF(cols: _*)
-    MergeSink.scd2Tx(spark, dir, b1, "source_id",
+    MergeSink.mergeIntoTx(spark, dir, b1, Seq("source_id"),
       Seq("version_ended_at", "is_current_version"))
     val b2 = Seq(
       row("v1", Some("2024-01-02 00:00:00"), cur = false),
       row("v2", None, cur = true)).toDF(cols: _*)
-    MergeSink.scd2Tx(spark, dir, b2, "source_id",
+    MergeSink.mergeIntoTx(spark, dir, b2, Seq("source_id"),
       Seq("version_ended_at", "is_current_version"))
-    MergeSink.scd2Tx(spark, dir, b2, "source_id",
+    MergeSink.mergeIntoTx(spark, dir, b2, Seq("source_id"),
       Seq("version_ended_at", "is_current_version")) // replay
     val t = TxTable.read(spark, dir).get
     assert(t.count() == 2)
     assert(t.filter(col("is_current_version")).select("source_id")
       .as[String].head() == "v2")
     assert(MergeSink.scd2Violations(t, Seq("entity"), "is_current_version").isEmpty)
-  }
-
-  test("M3/M4 insertIfAbsentTx: conflicts dropped, replay is a no-op commit-wise") {
-    val dir = tmpDir("tx-m3")
-    MergeSink.insertIfAbsentTx(spark, dir,
-      Seq(("r1", 1.0), ("r2", 2.0)).toDF("k", "v"), Seq("k"))
-    MergeSink.insertIfAbsentTx(spark, dir,
-      Seq(("r2", 999.0), ("r3", 3.0)).toDF("k", "v"), Seq("k"))
-    val got = TxTable.read(spark, dir).get.as[(String, Double)].collect().toMap
-    assert(got == Map("r1" -> 1.0, "r2" -> 2.0, "r3" -> 3.0))
-    MergeSink.insertIfAbsentTx(spark, dir,
-      Seq(("r2", 999.0), ("r3", 3.0)).toDF("k", "v"), Seq("k")) // full replay
-    assert(TxTable.read(spark, dir).get.count() == 3)
   }
 
   test("scoped Tx upsert: untouched partitions' files never touched, semantics exact") {
@@ -120,7 +107,7 @@ class TxTableSpec extends SparkTestBase {
 
   test("crash window: uncommitted staging and tmp log files are invisible; vacuum reclaims") {
     val dir = tmpDir("tx-crash")
-    MergeSink.upsertPartialTx(spark, dir,
+    MergeSink.mergeIntoTx(spark, dir,
       Seq(("a", "open", "n1")).toDF("k", "status", "note"), Seq("k"), Seq("status"))
     val committed = snapshot(dir)
 
@@ -138,7 +125,7 @@ class TxTableSpec extends SparkTestBase {
     assert(snapshot(dir) == committed)
 
     // vacuum also drops batches superseded by a later replace
-    MergeSink.upsertPartialTx(spark, dir,
+    MergeSink.mergeIntoTx(spark, dir,
       Seq(("a", "closed", "X")).toDF("k", "status", "note"), Seq("k"), Seq("status"))
     assert(TxTable.vacuum(spark, dir) >= 1)
     assert(snapshot(dir)("a") == ("closed", "n1"))
@@ -147,8 +134,7 @@ class TxTableSpec extends SparkTestBase {
   test("compactLog squashes history without touching data; reads unchanged") {
     val dir = tmpDir("tx-logcompact")
     for (i <- 1 to 5)
-      MergeSink.insertIfAbsentTx(spark, dir,
-        Seq((s"r$i", i.toDouble)).toDF("k", "v"), Seq("k"))
+      TxTable.append(spark, dir, Seq((s"r$i", i.toDouble)).toDF("k", "v"))
     val before = TxTable.read(spark, dir).get.as[(String, Double)].collect().toSet
     TxTable.compactLog(spark, dir)
     val logs = new java.io.File(s"$dir/_graft_log").listFiles()
@@ -156,7 +142,7 @@ class TxTableSpec extends SparkTestBase {
     assert(logs.length == 1)
     assert(TxTable.read(spark, dir).get.as[(String, Double)].collect().toSet == before)
     // still writable after compaction
-    MergeSink.insertIfAbsentTx(spark, dir, Seq(("r9", 9.0)).toDF("k", "v"), Seq("k"))
+    TxTable.append(spark, dir, Seq(("r9", 9.0)).toDF("k", "v"))
     assert(TxTable.read(spark, dir).get.count() == 6)
   }
 
@@ -261,8 +247,7 @@ class TxTableSpec extends SparkTestBase {
 
   test("append commits retry past a taken log slot; replace fails loudly") {
     val dir = tmpDir("tx-occ")
-    MergeSink.insertIfAbsentTx(spark, dir,
-      Seq(("r1", 1.0)).toDF("k", "v"), Seq("k"))
+    TxTable.append(spark, dir, Seq(("r1", 1.0)).toDF("k", "v"))
     // simulate a concurrent writer grabbing the next slot
     def occupyNextSlot(): Unit = {
       val next = TxTable.versions(spark, dir).last + 1
@@ -272,8 +257,7 @@ class TxTableSpec extends SparkTestBase {
     }
     occupyNextSlot()
     // append is conflict-free: lands in the slot after the interloper
-    MergeSink.insertIfAbsentTx(spark, dir,
-      Seq(("r2", 2.0)).toDF("k", "v"), Seq("k"))
+    TxTable.append(spark, dir, Seq(("r2", 2.0)).toDF("k", "v"))
     assert(TxTable.read(spark, dir).get.count() == 2)
 
     // OCC: capture the head as a reader would, let a writer interleave,
@@ -291,9 +275,9 @@ class TxTableSpec extends SparkTestBase {
   test("compactData collapses an append-fragmented table to one batch, contents intact") {
     val dir = tmpDir("tx-datacompact")
     for (i <- 1 to 6)
-      MergeSink.appendDedupTx(spark, dir,
+      TxTable.append(spark, dir,
         Seq((s"e$i", s"2024-03-0${(i % 3) + 1}", i.toDouble)).toDF("k", "d", "v"),
-        "k", Seq("d"))
+        Seq("d"))
     assert(TxTable.liveBatchCount(spark, dir) == 6)
     // partition inference types d as DATE and appends it — project explicitly
     def snap() = TxTable.read(spark, dir).get
@@ -312,8 +296,8 @@ class TxTableSpec extends SparkTestBase {
     val batches = new java.io.File(s"$dir/data").listFiles().count(_.isDirectory)
     assert(batches == 1, s"expected 1 staging dir after vacuum, got $batches")
     // still writable; appends start fragmenting again from the compacted base
-    MergeSink.appendDedupTx(spark, dir,
-      Seq(("e9", "2024-03-01", 9.0)).toDF("k", "d", "v"), "k", Seq("d"))
+    TxTable.append(spark, dir,
+      Seq(("e9", "2024-03-01", 9.0)).toDF("k", "d", "v"), Seq("d"))
     assert(TxTable.read(spark, dir).get.count() == 7)
   }
 
@@ -321,10 +305,9 @@ class TxTableSpec extends SparkTestBase {
     val dir = tmpDir("tx-partapp")
     val b = Seq(("e1", "2024-03-01", 1.0), ("e2", "2024-03-02", 2.0))
       .toDF("k", "d", "v")
-    MergeSink.appendDedupTx(spark, dir, b, "k", Seq("d"))
-    MergeSink.appendDedupTx(spark, dir,
-      Seq(("e2", "2024-03-02", 99.0), ("e3", "2024-03-01", 3.0)).toDF("k", "d", "v"),
-      "k", Seq("d"))
+    TxTable.append(spark, dir, b, Seq("d"))
+    TxTable.append(spark, dir,
+      Seq(("e3", "2024-03-01", 3.0)).toDF("k", "d", "v"), Seq("d"))
     val t = TxTable.read(spark, dir).get
     assert(t.count() == 3)
     assert(t.columns.toSet == Set("k", "d", "v"))

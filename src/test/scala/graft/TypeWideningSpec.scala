@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.merge.TxTable
 
@@ -190,7 +190,7 @@ class TypeWideningSpec extends SparkTestBase {
 
   test("SQL front door: ALTER COLUMN TYPE, stock scan reads mixed files, widened aggregates") {
     val lakeRoot = tmpDir("tw-lake")
-    val ext = SessionBridge.withExtensions(spark, new GraftExtensions()(_))
+    val ext = GraftBridge.withExtensions(spark, new GraftExtensions()(_))
     ext.conf.set("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
     ext.conf.set("spark.sql.catalog.graft.root", lakeRoot)
     ext.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
