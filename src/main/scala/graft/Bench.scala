@@ -90,7 +90,7 @@ object Bench {
         java.nio.file.Paths.get(s"/proc/$pid/status")))
         .linesIterator.find(_.startsWith("PPid:")).map(_.drop(5).trim)
     } catch { case _: Throwable => None }
-    var self = java.lang.ProcessHandle.current().pid().toString
+    val self = java.lang.ProcessHandle.current().pid().toString
     var lineage = Set(self)
     var cur: Option[String] = ppidOf(self)
     while (cur.exists(p => p != "0" && !lineage(p))) {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
-import graft.functions.{JsonFlatten, SafeCasts}
+import graft.functions.JsonFlatten
 import graft.functions.JsonFlatten.{AsLong, KeySpec}
 import graft.functions.SafeCasts._
 import graft.ops.{Denormalize, Timeline}

@@ -494,7 +494,6 @@ object SimSearch {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nCells: Int = 16, nProbe: Int = 4,
               lloydIters: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
     val c = spread(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec")))
 
@@ -667,7 +666,7 @@ object SimSearch {
     * 0.06 → 0.16 at m=4, two rounds), which is why
     * [[pqTopK]]/[[ivfPqTopK]] expose the knob. */
   private def pqCodebooks(cn: DataFrame, m: Int, sub: Int, nCodes: Int,
-                          lloydIters: Int = 0): Array[Array[Seq[Double]]] = {
+                          lloydIters: Int): Array[Array[Seq[Double]]] = {
     val seeds: Array[Seq[Double]] = cn
       .withColumn("__r", md5(concat(lit("pqseed|"), col("neighbor_id").cast("string"))))
       .orderBy(col("__r")).limit(nCodes)

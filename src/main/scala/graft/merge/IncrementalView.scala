@@ -1,6 +1,6 @@
 package graft.merge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained aggregate view over a [[TxTable]] — the

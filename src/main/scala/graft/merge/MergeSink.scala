@@ -13,12 +13,10 @@ import org.apache.spark.sql.functions._
   *  - M3/M4 (insert-if-absent / dedup append) are an anti-join against the
   *    sink keys followed by an APPEND — only new files are written, nothing
   *    is rewritten; at 100 TB this is the cheap idempotent path.
-  *  - M1/M2 (partial upsert / SCD2 close-out) rewrite via a full-outer merge
-  *    join and an atomic directory swap. This is exactly what a Delta MERGE
-  *    does minus the transaction log; on a real deployment the target would
-  *    be Delta/Iceberg and these become `whenMatched.updateExpr` merges with
-  *    partition pruning. The join itself is key-partitioned and never
-  *    collects to the driver.
+  *  - M1/M2 (partial upsert / SCD2 close-out) rewrite the whole target via
+  *    a full-outer merge join and an atomic directory swap: O(|target|) per
+  *    batch, like a Delta MERGE without file pruning. The join itself is
+  *    key-partitioned and never collects to the driver.
   *
   * All four modes are idempotent: re-applying a batch (the 90 s overlap
   * re-extraction, SURVEY §2.11 T3) converges to the same state —
@@ -85,14 +83,13 @@ object MergeSink {
     mergeInto(spark, dir, batch, keys, mutableCols, orderCols = orderCols)
 
   // ---------------------------------------------------------------------
-  // Partition-scoped merge (the 100 TB path for M1/M2)
+  // Partition-scoped merge
   //
-  // A naive parquet upsert reads and rewrites the WHOLE target per batch —
-  // O(|target|) every 30 s cycle, the definitional scale-killer. Scoped
-  // merge keys the physical layout so a batch only touches the partitions
-  // its keys live in: merge cost is O(|batch| + size of touched partitions).
-  // This is what a Delta/Iceberg MERGE does with partition pruning, minus
-  // the transaction log; the swap protocol below supplies the atomicity.
+  // Keys the physical layout so a batch reads and swaps only the partitions
+  // its keys live in. That saves work only when a batch's keys cluster; the
+  // ETL cycle's batches hash into every key bucket, so the cycle merges
+  // unpartitioned targets with [[mergeInto]]. Only `streaming.Streams`
+  // binds the scoped merge.
   // ---------------------------------------------------------------------
 
   /** Physical layout for scoped merges: `expr` derives the partition value
@@ -186,12 +183,6 @@ object MergeSink {
     }
   }
 
-  /** M2 on the scoped layout (see [[scd2]] for semantics). */
-  def scd2Scoped(spark: SparkSession, dir: String, batch: DataFrame,
-                 key: String, mutableCols: Seq[String], scheme: PartitionScheme,
-                 orderCols: Seq[String] = Nil): Unit =
-    upsertPartialScoped(spark, dir, batch, Seq(key), mutableCols, scheme, orderCols)
-
   /** M2 — versioned upsert, SCD2-flavored (load.py:50-83, 139-166): rows are
     * immutable versions keyed by `key` (source_id); a re-delivered version
     * refreshes only the close-out/validation columns (`mutableCols`,
@@ -265,8 +256,9 @@ object MergeSink {
     * WHEN semantics: not-true means the clause does not fire.
     *
     * One full-outer hash join on `keys` + one filter — single shuffle,
-    * no driver loop; for partition-scoped economics at scale compose with
-    * the scoped layouts the same way [[upsertPartialScoped]] does. */
+    * no driver loop. The target is rewritten unpartitioned; one that
+    * [[upsertPartialScoped]] laid out (`_graft_scheme` marker) loses its
+    * layout column in that rewrite. */
   def mergeInto(spark: SparkSession, dir: String, source: DataFrame,
                 keys: Seq[String], updateCols: Seq[String],
                 matchedDeleteCond: Option[Column] = None,
@@ -284,8 +276,12 @@ object MergeSink {
         if (insertNotMatched)
           writeReplace(spark, dir, filterInsertable(src, insertCond))
       case Some(existing) =>
+        // a bucketed target (upsertPartialScoped's marker) drops its
+        // PartitionScheme column and is rewritten unpartitioned
+        val cur = if (readSchemeMarker(spark, dir).isEmpty) existing
+          else existing.drop("part_bucket", "part_date")
         writeReplace(spark, dir,
-          mergePlan(existing, src, keys, updateCols, matchedDeleteCond,
+          mergePlan(cur, src, keys, updateCols, matchedDeleteCond,
             insertNotMatched, insertCond, notMatchedBySourceDeleteCond,
             updateSources).rows)
     }

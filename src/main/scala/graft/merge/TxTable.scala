@@ -1302,7 +1302,6 @@ object TxTable {
                         asOf: Option[Long] = None): DataFrame = {
     require(entries.nonEmpty, s"framesFor: no entries for $dir")
     val fs = hadoopFs(spark, dir)
-    val rootQ = fs.makeQualified(new Path(dir)).toString
     val (dvEntries, clean) = entries.partition(_.dv.isDefined)
     // per-batch EXISTS-default fill: a batch written BEFORE a defaulted
     // column was declared materializes the frozen declaration constant —

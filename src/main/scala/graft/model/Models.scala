@@ -1,7 +1,7 @@
 package graft.model
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Typed `Dataset[T]` edge for the six pipeline outputs (SURVEY §1.4): the
   * engine core stays `DataFrame` (wide, column-list driven), and these case

@@ -375,36 +375,24 @@ object ScenarioPipeline {
     * ([[MergeSink.readTarget]]). */
   def streams(spark: SparkSession, src: ScenarioSources,
               boot: Bootstrap): Seq[StreamSpec] = {
-    // within-batch: keep the newest row per key by wm_ts, then drop the
-    // runner-only wm_ts column so it never reaches the target schema
-    def latest(b: DataFrame, keys: Seq[String]): DataFrame =
-      MergeSink.latestPerKey(b, keys, Seq("wm_ts")).drop("wm_ts")
-    // M1/M2 targets are hash-bucketed on their merge key so each micro-batch
-    // rewrites only the partitions it touches (MergeSink scoped merge).
-    // 16 buckets suits the demo scale; a 100 TB deployment sizes this so one
-    // bucket stays executor-memory-sized (O(4k) buckets ≈ 25 GB each).
-    def buckets(key: String) = MergeSink.PartitionScheme.keyHash(Seq(key), 16)
-    def upsert(table: String, b: DataFrame, key: String,
-               mutable: Seq[String]): Unit =
-      MergeSink.upsertPartialScoped(spark, boot.tablePath(table),
-        latest(b, Seq(key)), Seq(key), mutable, buckets(key))
-    def scd2(table: String, b: DataFrame, key: String,
-             mutable: Seq[String]): Unit =
-      MergeSink.scd2Scoped(spark, boot.tablePath(table),
-        latest(b, Seq(key)), key, mutable, buckets(key))
+    // M1/M2: one MERGE with default clauses into an unpartitioned target.
+    // Its wm_ts window is the batch's one dedupe (newest row per key), and
+    // its projection onto the bootstrapped target's columns keeps wm_ts out
+    def merge(table: String, key: String, mutable: Seq[String]): DataFrame => Unit =
+      b => MergeSink.mergeInto(spark, boot.tablePath(table), b, Seq(key), mutable,
+        orderCols = Seq("wm_ts"))
     Seq(
       StreamSpec("fc_scenario",
         (sp, since) => extractScenarios(src, since), "wm_ts", "scenario_id",
-        b => upsert("dim_scenario", b, "scenario_id", Schemas.dimScenarioMutable),
+        merge("dim_scenario", "scenario_id", Schemas.dimScenarioMutable),
         cap = 5000),
       StreamSpec("fc_scenario_node_data",
         (sp, since) => extractNodeData(src, since), "wm_ts", "source_id",
-        b => scd2("fact_node_input_history", b, "source_id",
-          Schemas.nodeHistoryMutable),
+        merge("fact_node_input_history", "source_id", Schemas.nodeHistoryMutable),
         cap = 5000),
       StreamSpec("fc_scenario_run",
         (sp, since) => extractRuns(src, since), "wm_ts", "run_id",
-        b => upsert("fact_run_summary", b, "run_id", Schemas.runSummaryMutable),
+        merge("fact_run_summary", "run_id", Schemas.runSummaryMutable),
         cap = 1000),
       StreamSpec("fc_scenario_node_calc",
         (sp, since) => extractNodeCalc(src, since), "wm_ts", "source_id",
@@ -413,8 +401,7 @@ object ScenarioPipeline {
         cap = 5000),
       StreamSpec("fc_scenario_event_data",
         (sp, since) => extractEventData(src, since), "wm_ts", "source_id",
-        b => scd2("fact_event_input_history", b, "source_id",
-          Schemas.eventHistoryMutable),
+        merge("fact_event_input_history", "source_id", Schemas.eventHistoryMutable),
         cap = 5000),
       StreamSpec("fc_scenario_timeline",
         (sp, since) => extractTimeline(src, since), "wm_ts", "source_key",

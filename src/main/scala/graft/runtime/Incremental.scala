@@ -76,47 +76,60 @@ class IncrementalRunner(spark: SparkSession, store: WatermarkStore,
     * batch that fell entirely inside the overlap window carries only
     * already-seen timestamps, so advancing to its max would walk the
     * watermark backwards and wedge the stream on the same historical page.
-    */
+    *
+    * Every Spark job the stream starts is described `stream=<name>
+    * phase=extract|sink|cursor|advance` (`spark.job.description`, on this
+    * thread only); the thread's previous description is restored after. */
   private def runStream(s: StreamSpec): StreamResult = {
-    var total = 0L
-    var loops = 0
-    var drained = false
-    val since = store.since(s.name, overlapSec)
-    var cursor: Option[(Timestamp, Any)] = None
-    while (!drained) {
-      val base = s.extract(spark, since)
-      val page = cursor match {
-        case None => base
-        case Some((wm, tie)) =>
-          base.filter(col(s.watermarkCol) > lit(wm) ||
-            (col(s.watermarkCol) === lit(wm) && col(s.tieBreakCol) > lit(tie)))
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
+    def phase(p: String): Unit = sc.setJobDescription(s"stream=${s.name} phase=$p")
+    try {
+      var total = 0L
+      var loops = 0
+      var drained = false
+      phase("extract")
+      val since = store.since(s.name, overlapSec)
+      var cursor: Option[(Timestamp, Any)] = None
+      while (!drained) {
+        phase("extract")
+        val base = s.extract(spark, since)
+        val page = cursor match {
+          case None => base
+          case Some((wm, tie)) =>
+            base.filter(col(s.watermarkCol) > lit(wm) ||
+              (col(s.watermarkCol) === lit(wm) && col(s.tieBreakCol) > lit(tie)))
+        }
+        val batch = page
+          .orderBy(col(s.watermarkCol), col(s.tieBreakCol))
+          .limit(s.cap)
+          .localCheckpoint() // batch is consumed 3× (sink, count, max); pin it
+        val n = batch.count()
+        if (n > 0) {
+          phase("sink")
+          s.sink(batch)
+          phase("cursor")
+          val top = batch
+            .agg(max(struct(col(s.watermarkCol).as("w"), col(s.tieBreakCol).as("t"))))
+            .collect()(0).getStruct(0)
+          cursor = Some((WatermarkStore.tsOf(top.get(0)), top.get(1)))
+        }
+        val wallNow = now()
+        drained = n < s.cap
+        // T8: advance even on an empty batch so the overlap window stays 90s.
+        // Never regress: max(previous watermark, candidate) — candidate is NOW
+        // once fully drained (like the reference) else the max seen this page.
+        val candidate: Timestamp =
+          if (drained) wallNow else cursor.map(_._1).getOrElse(wallNow)
+        phase("advance")
+        val prev = store.get(s.name).map(_.lastFetchedAt)
+        val newWm = prev.filter(_.after(candidate)).getOrElse(candidate)
+        store.advance(s.name, n, newWm, wallNow)
+        total += n
+        loops += 1
       }
-      val batch = page
-        .orderBy(col(s.watermarkCol), col(s.tieBreakCol))
-        .limit(s.cap)
-        .localCheckpoint() // batch is consumed 3× (sink, count, max); pin it
-      val n = batch.count()
-      if (n > 0) {
-        s.sink(batch)
-        val top = batch
-          .agg(max(struct(col(s.watermarkCol).as("w"), col(s.tieBreakCol).as("t"))))
-          .collect()(0).getStruct(0)
-        cursor = Some((WatermarkStore.tsOf(top.get(0)), top.get(1)))
-      }
-      val wallNow = now()
-      drained = n < s.cap
-      // T8: advance even on an empty batch so the overlap window stays 90s.
-      // Never regress: max(previous watermark, candidate) — candidate is NOW
-      // once fully drained (like the reference) else the max seen this page.
-      val candidate: Timestamp =
-        if (drained) wallNow else cursor.map(_._1).getOrElse(wallNow)
-      val prev = store.get(s.name).map(_.lastFetchedAt)
-      val newWm = prev.filter(_.after(candidate)).getOrElse(candidate)
-      store.advance(s.name, n, newWm, wallNow)
-      total += n
-      loops += 1
-    }
-    StreamResult(s.name, total, loops, None)
+      StreamResult(s.name, total, loops, None)
+    } finally sc.setJobDescription(outer)
   }
 }
 

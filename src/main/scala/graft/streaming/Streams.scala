@@ -74,9 +74,10 @@ object Streams {
         : (SparkSession, DataFrame, Long) => Unit =
       (s, b, _) => MergeSink.scd2(s, dir, b, key, mutableCols, orderCols)
 
-    /** The partition-scoped upsert — the sink the production pipelines
-      * bind (each micro-batch merges against ONLY the hash buckets its
-      * keys live in; O(batch + touched partitions), never O(target)). */
+    /** The partition-scoped upsert: each micro-batch merges against only
+      * the partitions its keys live in, so it saves work only when a
+      * batch's keys cluster (the ETL cycle, whose batches touch every
+      * bucket, binds the unpartitioned [[MergeSink.mergeInto]]). */
     def upsertScoped(dir: String, keys: Seq[String], mutableCols: Seq[String],
                      scheme: MergeSink.PartitionScheme,
                      orderCols: Seq[String] = Nil)

@@ -199,4 +199,45 @@ class IncrementalRunnerSpec extends SparkTestBase {
     assert(reports.forall(_.failed.isEmpty))        // hiccup didn't fail the cycle
     assert(alerts.exists(_.contains("maintenance failed")))
   }
+
+  test("every job a stream starts is described with its stream and phase") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val store = new WatermarkStore(spark, tmpDir("wm6"))
+    val src = new Source
+    src.horizon = Timestamp.valueOf("2024-01-05 00:00:00")
+    def spec(name: String) = StreamSpec(name, extract = src.extract,
+      watermarkCol = "ts", tieBreakCol = "event_id",
+      sink = b => MergeSink.appendDedup(spark, tmpDir(name), b, "event_id"), cap = 100)
+    // the pool threads inherit this mark, so it selects the cycle's jobs
+    val mark = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.spec.mark") == mark)
+          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.mark", mark)
+    sc.setJobDescription("outer")
+    try {
+      val r = new IncrementalRunner(spark, store, overlapSec = 90, now = () => src.horizon,
+        maxConcurrentStreams = 2).runCycle(Seq(spec("a"), spec("b")))
+      assert(r.failed.isEmpty, r.failed.mkString(","))
+      assert(r.results.forall(_.drainedLoops > 1))
+      assert(sc.getLocalProperty("spark.job.description") == "outer")
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setLocalProperty("graft.spec.mark", null)
+      sc.setJobDescription(null)
+    }
+    import scala.jdk.CollectionConverters._
+    val descs = seen.asScala.toSeq
+    val tag = "stream=(a|b) phase=(extract|sink|cursor|advance)".r
+    assert(descs.nonEmpty && descs.forall(tag.matches), descs.distinct)
+    assert(descs.toSet == (for (s <- Seq("a", "b"); p <- Seq("extract", "sink",
+      "cursor", "advance")) yield s"stream=$s phase=$p").toSet, descs.distinct)
+  }
 }

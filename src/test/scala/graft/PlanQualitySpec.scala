@@ -585,41 +585,55 @@ class PlanQualitySpec extends SparkTestBase {
     assert(!p.contains("Generate"), p)
   }
 
-  test("M1 scoped upsert plans one full-outer join, no Filter above it") {
+  test("the cycle's M1 sink: one wm_ts dedupe, one full-outer join, no Filter above") {
     import scala.jdk.CollectionConverters._
-    import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.FullOuter
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Filter, Join,
+      LogicalPlan, Window}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val dir = tmpDir("m1-plan")
-    val scheme = graft.merge.MergeSink.PartitionScheme.keyHash(Seq("k"), 4)
-    graft.merge.MergeSink.upsertPartialScoped(spark, dir,
-      (1 to 20).map(i => (s"k$i", "open", s"n$i")).toDF("k", "status", "note"),
-      Seq("k"), Seq("status"), scheme)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val boot = new graft.catalog.Bootstrap(spark, tmpDir("m1-plan"))
+    boot.setup()
+    val stream = graft.ops.ScenarioPipeline.streams(spark,
+      graft.demo.ReferenceFixtures.build(spark), boot).find(_.name == "fc_scenario").get
+    // the runner hands the sink a pinned batch; the first one seeds the target
+    def batch(limit: Int) = stream.extract(spark, graft.runtime.WatermarkStore.defaultSince)
+      .orderBy("wm_ts", "scenario_id").limit(limit).localCheckpoint()
+    stream.sink(batch(10))
+    val next = batch(20)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         plans.add(qe.optimizedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(st => stages.add(st.name))
+    }
     org.apache.spark.ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(jobs)
     try {
-      graft.merge.MergeSink.upsertPartialScoped(spark, dir,
-        Seq(("k3", "closed", "X"), ("k99", "open", "n99")).toDF("k", "status", "note"),
-        Seq("k"), Seq("status"), scheme)
+      stream.sink(next)
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
     val merges = plans.asScala.toSeq.filter(_.exists(_.isInstanceOf[Join]))
     assert(merges.size == 1, merges.mkString("\n"))
     val p = merges.head
     assert(p.collect { case j: Join => j.joinType } == Seq(FullOuter), p)
+    // one dedupe: the wm_ts window, and no aggregate or dropDuplicates
+    assert(p.collect { case w: Window => w }.size == 1, p)
+    assert(!p.exists(n => n.isInstanceOf[Aggregate] || n.isInstanceOf[Deduplicate]), p)
     def above(n: LogicalPlan): Seq[LogicalPlan] =
       if (n.isInstanceOf[Join]) Nil else n +: n.children.flatMap(above)
-    val top = above(p)
-    assert(!top.exists(_.isInstanceOf[Filter]), p)
-    // one projection computes the merged columns, one the bucket column
-    assert(top.count(_.isInstanceOf[Project]) == 2, p)
+    assert(!above(p).exists(_.isInstanceOf[Filter]), p)
+    // the sink pins nothing of its own
+    assert(!stages.asScala.exists(_.startsWith("localCheckpoint")), stages)
   }
 }
